@@ -643,10 +643,22 @@ def fgb_encode(
     return MAGIC + header + idx + b"".join(feats)
 
 
+def _check_preamble(buf: bytes) -> tuple[int]:
+    """Magic + header length of the 12-byte preamble."""
+    if len(buf) < 12:
+        raise ValueError(f"truncated FlatGeobuf preamble: {len(buf)} bytes")
+    if bytes(buf[:3]) != b"fgb":
+        raise ValueError("not a FlatGeobuf file")
+    return struct.unpack_from("<I", buf, 8)
+
+
 def _header_info(buf: bytes):
     """→ (cols, features_count, node_size, features_start, envelope)."""
-    assert bytes(buf[:3]) == b"fgb", "not a FlatGeobuf blob"
-    (hlen,) = struct.unpack_from("<I", buf, 8)
+    (hlen,) = _check_preamble(buf)
+    if len(buf) < 12 + hlen:
+        raise ValueError(
+            f"truncated FlatGeobuf header: {len(buf) - 12} of {hlen} bytes"
+        )
     h = _root(buf, 12)
     cols = [
         (t.string(0), int(t.scalar(1, "B", 0))) for t in h.tables(7)
@@ -739,8 +751,7 @@ def read_fgb(
     opener = opener or local_opener
     with opener(path) as f:
         head = f.read(12)
-        assert head[:3] == b"fgb", "not a FlatGeobuf file"
-        (hlen,) = struct.unpack_from("<I", head, 8)
+        (hlen,) = _check_preamble(head)
         header = f.read(hlen)
     buf = head + header
     cols, n, node_size, idx_start, feat_start, _ = _header_info(buf)

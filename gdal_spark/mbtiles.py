@@ -34,6 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import mercator
 
@@ -49,6 +50,17 @@ MANIFEST_SCHEMA = (
     "path string, n_tiles long, minzoom int, maxzoom int, "
     "n_bytes long, md5 string"
 )
+
+
+def require_integral(df: DataFrame, col: str) -> None:
+    """Plan-time check that a granule key names files as integers: a
+    cast would turn a string key into NULL and merge every group."""
+    dtype = df.schema[col].dataType
+    if not isinstance(dtype, T.IntegralType):
+        raise ValueError(
+            f"group_col {col!r} must be an integral column, got "
+            f"{dtype.simpleString()}"
+        )
 
 
 def _tile_payloads(pdf: pd.DataFrame, fmt: str, quality: int,
@@ -118,6 +130,7 @@ def write_mbtiles(
                     exist_ok=True)
         src = tiles.select(F.lit(0).cast("long").alias("__key"), *need)
     else:
+        require_integral(tiles, group_col)
         os.makedirs(out, exist_ok=True)
         src = tiles.select(
             F.col(group_col).cast("long").alias("__key"), *need

@@ -15,6 +15,9 @@ Design notes (100 TB posture):
 * **Overviews** are a single self-shuffle per level on the parent tile
   key — exactly gdal2tiles's create_overview_tile data flow
   (gdal2tiles.py:1471) with the 4-children group as a Spark groupBy.
+  In ``pyramid`` that one exchange per level also serves the level's
+  own output branch (AQE reuses it), so each overview tile is built
+  once per job.
 * **Warp** enumerates destination blocks on the driver (metadata only),
   computes each block's source-tile cover analytically from the affine
   transforms, and ships (dst block × src tile) pairs through an
@@ -148,11 +151,22 @@ def burn_points_tiles(
 # ---------------------------------------------------------------------------
 
 
+def _with_parent_keys(tiles: DataFrame) -> DataFrame:
+    return tiles.withColumn("ptx", (F.col("tx") / 2).cast("long")).withColumn(
+        "pty", (F.col("ty") / 2).cast("long")
+    )
+
+
 def overview_level(tiles: DataFrame, method: str = "average") -> DataFrame:
     """One pyramid level up: groupBy(parent tile) over ≤4 children,
     2x2 block-reduce each child, place in its parent quadrant
     (gdal2tiles create_overview_tile semantics, gdal2tiles.py:1471;
     reduce semantics gcore/overview.cpp). Missing children → 0."""
+    return _reduce_keyed(_with_parent_keys(tiles), method)
+
+
+def _reduce_keyed(parent: DataFrame, method: str) -> DataFrame:
+    """overview_level over tiles that already carry (ptx, pty)."""
 
     def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
         ts = int(pdf["w"].iloc[0])
@@ -175,9 +189,6 @@ def overview_level(tiles: DataFrame, method: str = "average") -> DataFrame:
             }
         )
 
-    parent = tiles.withColumn("ptx", (F.col("tx") / 2).cast("long")).withColumn(
-        "pty", (F.col("ty") / 2).cast("long")
-    )
     # z in the keys: a multi-zoom input (e.g. a pyramid() output fed
     # back in) must never merge tiles from different levels
     return parent.groupBy("z", "ptx", "pty").applyInPandas(
@@ -216,10 +227,7 @@ def overview_gauss(tiles: DataFrame) -> DataFrame:
             }
         )
 
-    parent = padded.withColumn(
-        "ptx", (F.col("tx") / 2).cast("long")
-    ).withColumn("pty", (F.col("ty") / 2).cast("long"))
-    return parent.groupBy("z", "ptx", "pty").applyInPandas(
+    return _with_parent_keys(padded).groupBy("z", "ptx", "pty").applyInPandas(
         reduce_group, TILE_SCHEMA
     )
 
@@ -255,10 +263,7 @@ def overview_cubic(tiles: DataFrame) -> DataFrame:
             }
         )
 
-    parent = padded.withColumn(
-        "ptx", (F.col("tx") / 2).cast("long")
-    ).withColumn("pty", (F.col("ty") / 2).cast("long"))
-    return parent.groupBy("z", "ptx", "pty").applyInPandas(
+    return _with_parent_keys(padded).groupBy("z", "ptx", "pty").applyInPandas(
         reduce_group, TILE_SCHEMA
     )
 
@@ -267,20 +272,32 @@ def pyramid(
     base: DataFrame, base_zoom: int, min_zoom: int = 0, method: str = "average"
 ) -> DataFrame:
     """Full overview pyramid base_zoom → min_zoom (inclusive), unioned.
-    Each level is one narrow groupBy shuffle; levels are sequential
-    stages exactly as in the reference tiler. All resamplers dispatch
-    here — the halo-exchange ones (gauss, cubic) included."""
-    out = base
+    Each level is one groupBy shuffle; levels are sequential stages
+    exactly as in the reference tiler. All resamplers dispatch here —
+    the halo-exchange ones (gauss, cubic) included.
+
+    Block-reduce methods (average, nearest, mode, ...) give each level
+    ONE exchange that feeds both its parent and the output: the level
+    is hash-partitioned on its parent key (z, ptx, pty), the next level
+    groups that frame with no further exchange, and the level's union
+    branch is the same frame with the keys dropped, which AQE serves
+    from the reused shuffle. Spark reuses exchanges, not Python nodes,
+    so a union branch taken above the shuffle would run the level's
+    FlatMapGroupsInPandas a second time. gauss and cubic group after
+    their own halo exchange and keep the plain union of levels."""
+    out = None
     level = base
     for _ in range(base_zoom - min_zoom):
-        if method == "gauss":
-            level = overview_gauss(level)
-        elif method == "cubic":
-            level = overview_cubic(level)
+        if method in ("gauss", "cubic"):
+            branch = level
+            step = overview_gauss if method == "gauss" else overview_cubic
+            level = step(level)
         else:
-            level = overview_level(level, method)
-        out = out.unionByName(level)
-    return out
+            keyed = _with_parent_keys(level).repartition("z", "ptx", "pty")
+            branch = keyed.drop("ptx", "pty")
+            level = _reduce_keyed(keyed, method)
+        out = branch if out is None else out.unionByName(branch)
+    return level if out is None else out.unionByName(level)
 
 
 # ---------------------------------------------------------------------------

@@ -11,7 +11,9 @@ locate any tile by byte range.
 This module implements the spec directly with the stdlib + the
 engine's existing pieces: the Hilbert curve from `fgb.hilbert_d` (+
 the inverse here), gzip for internal compression, and the PNG/JPEG/
-MVT payload codecs already in-tree.
+MVT payload codecs already in-tree. The reader honours the header's
+internal and tile compression flags (none or gzip) and rejects any
+other code, like any malformed header, with ``ValueError``.
 
 Scale shape (the gtiff/fgb pattern): `read_pmtiles`'s DRIVER reads
 the header + directories only — never a tile byte; executors
@@ -32,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .fgb import hilbert_d
+from .mbtiles import require_integral
 
 MAGIC = b"PMTiles"
 VERSION = 3
@@ -202,7 +205,15 @@ def _pack_header(
 
 
 def _parse_header(h: bytes) -> dict:
-    assert h[:7] == MAGIC and h[7] == VERSION, "not a PMTiles v3 file"
+    if len(h) < HEADER_BYTES:
+        raise ValueError(
+            f"truncated PMTiles header: {len(h)} of {HEADER_BYTES} bytes"
+        )
+    if h[:7] != MAGIC or h[7] != VERSION:
+        raise ValueError("not a PMTiles v3 file")
+    for flag in (h[97], h[98]):
+        if flag not in (COMPRESSION_NONE, COMPRESSION_GZIP):
+            raise ValueError(f"unsupported PMTiles compression code {flag}")
     vals = struct.unpack_from("<QQQQQQQQQQQ", h, 8)
     return {
         "root_off": vals[0], "root_len": vals[1],
@@ -291,16 +302,24 @@ def pmtiles_encode(
     return hdr + root + meta + leaves + bytes(data)
 
 
+def _decompress(blob: bytes, code: int) -> bytes:
+    """Undo a header compression flag (spec §compression);
+    _parse_header admits only none and gzip."""
+    return gzip.decompress(blob) if code == COMPRESSION_GZIP else blob
+
+
 def _all_entries(buf: bytes, hdr: dict) -> list[tuple[int, int, int, int]]:
     """Header + directories → every tile entry (leaf dirs resolved)."""
-    root = gzip.decompress(
-        buf[hdr["root_off"]: hdr["root_off"] + hdr["root_len"]]
+    code = hdr["internal_compression"]
+    root = _decompress(
+        buf[hdr["root_off"]: hdr["root_off"] + hdr["root_len"]], code
     )
     out = []
     for tid, off, ln, rl in parse_directory(root):
         if rl == 0:  # leaf pointer
-            leaf = gzip.decompress(
-                buf[hdr["leaf_off"] + off: hdr["leaf_off"] + off + ln]
+            leaf = _decompress(
+                buf[hdr["leaf_off"] + off: hdr["leaf_off"] + off + ln],
+                code,
             )
             out.extend(parse_directory(leaf))
         else:
@@ -311,14 +330,15 @@ def _all_entries(buf: bytes, hdr: dict) -> list[tuple[int, int, int, int]]:
 def pmtiles_decode(buf: bytes) -> pd.DataFrame:
     """One archive → (z, tx, ty, data)."""
     hdr = _parse_header(buf[:HEADER_BYTES])
+    code = hdr["tile_compression"]
     rows = []
     for tid, off, ln, rl in _all_entries(buf, hdr):
+        payload = _decompress(
+            buf[hdr["data_off"] + off: hdr["data_off"] + off + ln], code
+        )
         for k in range(max(1, rl)):
             z, x, y = tileid_to_zxy(tid + k)
-            rows.append(
-                (z, x, y,
-                 buf[hdr["data_off"] + off: hdr["data_off"] + off + ln])
-            )
+            rows.append((z, x, y, payload))
     return pd.DataFrame(rows, columns=["z", "tx", "ty", "data"])
 
 
@@ -380,6 +400,7 @@ def read_pmtiles(
         for i in range(n_chunks)
     ]
     data_off = hdr["data_off"]
+    tile_code = hdr["tile_compression"]
     rng = spark.createDataFrame(
         chunk_rows, "cid long, entries binary"
     ).repartitionByRange(min(n_chunks, 64), "cid")
@@ -395,7 +416,9 @@ def read_pmtiles(
                     blob = f.read(hi - lo)
                 rows = []
                 for tid, off, ln, rl in chunk:
-                    payload = blob[off - lo: off - lo + ln]
+                    payload = _decompress(
+                        blob[off - lo: off - lo + ln], tile_code
+                    )
                     for k in range(max(1, int(rl))):
                         t = int(tid) + k
                         if zrange is not None and not (
@@ -419,22 +442,29 @@ def write_pmtiles_dir(
 ) -> DataFrame:
     """Granule-parallel sink: one .pmtiles archive per group (or per
     partition), encoded inside the task from (z, tx, ty, data) rows.
-    Manifest (path, n_tiles). Shared-FS contract."""
-    os.makedirs(out_dir, exist_ok=True)
+    Manifest (path, n_tiles). Shared-FS contract.
+
+    Building the sink starts no Spark job. With ``group_col`` (an
+    integral column) the rows regroup through one hash exchange on it;
+    AQE may pack several groups into one task, which still writes one
+    archive per group. Without it the granule is the upstream
+    partition: ``mapInPandas`` runs on those partitions with no
+    exchange and writes one archive per non-empty partition. Either
+    way the input's own exchanges (e.g. a pyramid's per-level
+    shuffles) run once, inside the write."""
     if group_col is None:
         src = df.withColumn("__g", F.spark_partition_id())
-        gcol = "__g"
     else:
-        src = df.withColumn("__g", F.col(group_col))
-        gcol = "__g"
-    n_gran = max(1, df.rdd.getNumPartitions())
+        require_integral(df, group_col)
+        src = df.withColumn("__g", F.col(group_col)).repartition("__g")
+    os.makedirs(out_dir, exist_ok=True)
 
     def sink(batches):
         pdfs = [p for p in batches if len(p)]
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True)
-        for g, grp in pdf.groupby(gcol):
+        for g, grp in pdf.groupby("__g"):
             tiles = [
                 (int(r.z), int(r.tx), int(r.ty), bytes(r.data))
                 for r in grp.itertuples(index=False)
@@ -449,6 +479,4 @@ def write_pmtiles_dir(
                 {"path": [p], "n_tiles": [len(tiles)]}
             )
 
-    return src.repartition(n_gran, gcol).mapInPandas(
-        sink, "path string, n_tiles long"
-    )
+    return src.mapInPandas(sink, "path string, n_tiles long")

@@ -305,3 +305,26 @@ def test_fgb_arrival_stream_matches_batch(spark, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def _corrupt_and_truncated():
+    blob = fgb.fgb_encode(_mixed_pdf())
+    return {
+        "magic": b"xyz" + blob[3:],
+        "preamble": blob[:8],
+        "header": blob[:40],
+    }
+
+
+@pytest.mark.parametrize("case", ["magic", "preamble", "header"])
+def test_fgb_decode_bad_header_raises_value_error(case):
+    with pytest.raises(ValueError, match="FlatGeobuf"):
+        fgb.fgb_decode(_corrupt_and_truncated()[case])
+
+
+@pytest.mark.parametrize("case", ["magic", "preamble", "header"])
+def test_read_fgb_bad_header_raises_value_error(spark, tmp_path, case):
+    p = str(tmp_path / "bad.fgb")
+    open(p, "wb").write(_corrupt_and_truncated()[case])
+    with pytest.raises(ValueError, match="FlatGeobuf"):
+        fgb.read_fgb(spark, p)

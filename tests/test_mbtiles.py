@@ -10,6 +10,7 @@ import sqlite3
 import numpy as np
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from gdal_spark import mbtiles
 from gdal_spark.png import png_encode
@@ -127,3 +128,13 @@ def test_deterministic_rerun_bytes(spark, tmp_path):
     m1 = mbtiles.write_mbtiles(df, p1).collect()[0]
     m2 = mbtiles.write_mbtiles(df, p2).collect()[0]
     assert m1.md5 == m2.md5
+
+
+def test_group_col_must_be_integral(spark, tmp_path):
+    """A string granule key would cast to NULL and merge every group
+    into one file; the sink rejects it while the plan is built."""
+    df = _tiles_df(spark).withColumn("region", F.lit("north"))
+    with pytest.raises(ValueError, match="integral"):
+        mbtiles.write_mbtiles(
+            df, str(tmp_path / "s"), format="png", group_col="region"
+        )

@@ -6,6 +6,7 @@ import gzip
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from gdal_spark import pmtiles
 
@@ -216,3 +217,152 @@ def test_run_length_crossing_zoom_boundary(spark, tmp_path):
         for r in z2.itertuples(index=False)
     ) == [5, 6]
     assert all(bytes(d) == payload for d in z2["data"])
+
+
+# ---------------------------------------------------------------------------
+# hostile headers and the spec's compression flags
+# ---------------------------------------------------------------------------
+
+
+def _blob():
+    return pmtiles.pmtiles_encode(_mk_tiles(8, z=2), fmt="png")
+
+
+def test_corrupt_magic_raises_value_error():
+    bad = b"XMTiles" + _blob()[7:]
+    with pytest.raises(ValueError, match="not a PMTiles"):
+        pmtiles._parse_header(bad[:pmtiles.HEADER_BYTES])
+    with pytest.raises(ValueError, match="not a PMTiles"):
+        pmtiles.pmtiles_decode(bad)
+
+
+def test_truncated_header_raises_value_error():
+    with pytest.raises(ValueError, match="truncated"):
+        pmtiles._parse_header(_blob()[:60])
+    with pytest.raises(ValueError, match="truncated"):
+        pmtiles.pmtiles_decode(_blob()[:60])
+
+
+def _archive(tiles, internal, tile_code):
+    """Hand-assembled single-directory archive with the given header
+    compression flags (the engine's writer always emits gzip / none)."""
+    def pack(b, code):
+        return gzip.compress(b, 6, mtime=0) if code == 2 else b
+
+    data = bytearray()
+    entries = []
+    for z, x, y, payload in sorted(
+        tiles, key=lambda t: pmtiles.zxy_to_tileid(*t[:3])
+    ):
+        blob = pack(payload, tile_code)
+        entries.append(
+            (pmtiles.zxy_to_tileid(z, x, y), len(data), len(blob), 1)
+        )
+        data += blob
+    root = pack(pmtiles.serialize_directory(entries), internal)
+    meta = pack(b"{}", internal)
+    root_off = pmtiles.HEADER_BYTES
+    meta_off = root_off + len(root)
+    data_off = meta_off + len(meta)
+    hdr = bytearray(pmtiles._pack_header(
+        root_off, len(root), meta_off, len(meta), data_off, 0,
+        data_off, len(data), len(entries), len(entries), len(entries),
+        pmtiles.TILE_TYPE["mvt"], 1, 1, (-180.0, -85.0, 180.0, 85.0),
+    ))
+    hdr[97], hdr[98] = internal, tile_code
+    return bytes(hdr) + root + meta + bytes(data)
+
+
+_RAW = [(1, x, y, bytes(f"mvt-{x}-{y}", "ascii") * 20)
+        for x in range(2) for y in range(2)]
+
+
+def test_uncompressed_directories_and_gzip_tiles(spark, tmp_path):
+    blob = _archive(_RAW, pmtiles.COMPRESSION_NONE, pmtiles.COMPRESSION_GZIP)
+    want = {(z, x, y): d for z, x, y, d in _RAW}
+    out = pmtiles.pmtiles_decode(blob)
+    assert {(r.z, r.tx, r.ty): bytes(r.data)
+            for r in out.itertuples(index=False)} == want
+    p = str(tmp_path / "g.pmtiles")
+    open(p, "wb").write(blob)
+    ranged = pmtiles.read_pmtiles(spark, p).toPandas()
+    assert {(r.z, r.tx, r.ty): bytes(r.data)
+            for r in ranged.itertuples(index=False)} == want
+
+
+@pytest.mark.parametrize("internal, tile_code", [(3, 1), (2, 4), (0, 1)])
+def test_undecodable_compression_raises_value_error(internal, tile_code):
+    # 3 brotli, 4 zstd, 0 unknown: none is decodable in-engine
+    blob = _archive(_RAW, internal, tile_code)
+    with pytest.raises(ValueError, match="compression"):
+        pmtiles.pmtiles_decode(blob)
+
+
+# ---------------------------------------------------------------------------
+# granule sink contract
+# ---------------------------------------------------------------------------
+
+
+def test_write_pmtiles_dir_starts_no_job(spark, tmp_path):
+    """Building the sink must not run its input: a partition-count
+    probe would execute every upstream shuffle stage in a query of its
+    own, and the write would then run them again."""
+    pdf = pd.DataFrame(
+        [(3, x, y, bytes(f"t{x}.{y}", "ascii"))
+         for x in range(8) for y in range(8)],
+        columns=["z", "tx", "ty", "data"],
+    )
+    src = spark.createDataFrame(pdf).repartition(4, "tx")
+    sc = spark.sparkContext
+    group = "write_pmtiles_dir-build"
+    sc.setJobGroup(group, "plan build only")
+    try:
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        manifest = pmtiles.write_pmtiles_dir(
+            src, str(tmp_path / "sink"), fmt="png", group_col="z"
+        )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        after = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert after == before == 0
+    assert manifest.toPandas()["n_tiles"].sum() == 64
+
+
+def test_write_pmtiles_dir_partition_granules(spark, tmp_path):
+    """group_col=None: the granule is the upstream partition — one
+    archive per non-empty partition, no exchange."""
+    src = spark.range(0, 6, 1, 8).select(
+        F.lit(3).cast("long").alias("z"),
+        F.col("id").alias("tx"),
+        F.lit(0).cast("long").alias("ty"),
+        F.col("id").cast("string").cast("binary").alias("data"),
+    )
+    assert src.rdd.getNumPartitions() == 8
+    non_empty = src.select(F.spark_partition_id()).distinct().count()
+    assert 0 < non_empty < 8
+    manifest = pmtiles.write_pmtiles_dir(src, str(tmp_path / "sink"))
+    rows = manifest.collect()
+    plan = manifest._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert len(rows) == non_empty
+    assert sum(int(r.n_tiles) for r in rows) == 6
+    got = {}
+    for r in rows:
+        with open(r.path, "rb") as f:
+            for t in pmtiles.pmtiles_decode(f.read()).itertuples(index=False):
+                got[(t.z, t.tx, t.ty)] = bytes(t.data)
+    assert got == {(3, i, 0): str(i).encode() for i in range(6)}
+
+
+def test_write_pmtiles_dir_rejects_non_integral_group_col(spark, tmp_path):
+    pdf = pd.DataFrame(
+        [(3, x, 0, b"t", "north" if x < 2 else "south") for x in range(4)],
+        columns=["z", "tx", "ty", "data", "region"],
+    )
+    with pytest.raises(ValueError, match="integral"):
+        pmtiles.write_pmtiles_dir(
+            spark.createDataFrame(pdf), str(tmp_path / "s"),
+            group_col="region",
+        )

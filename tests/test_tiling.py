@@ -5,6 +5,7 @@ answer computed two ways)."""
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from gdal_spark import mercator, raster
 from gdal_spark.operators import tiling
@@ -80,6 +81,50 @@ def test_pyramid_matches_numpy(spark, points_pdf):
         np.testing.assert_array_equal(
             arr, levels[z][ty * ts : (ty + 1) * ts, tx * ts : (tx + 1) * ts],
             err_msg=f"tile z={z} {tx},{ty}",
+        )
+
+
+def _count_plan_nodes(query_execution, name: str) -> int:
+    """Nodes called ``name`` that ran in an executed adaptive plan:
+    descends into query stages, not into reused exchanges (their
+    subtree ran where the exchange first appeared)."""
+    todo = [query_execution.executedPlan()]
+    n = 0
+    while todo:
+        p = todo.pop()
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(p.finalPhysicalPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(p.plan())
+        elif cls != "ReusedExchangeExec":
+            n += p.nodeName() == name
+            kids = p.children()
+            todo.extend(kids.apply(i) for i in range(kids.length()))
+    return n
+
+
+def test_pyramid_runs_each_level_once(spark):
+    """Each level's exchange feeds both its parent and the union
+    branch, so every level's Python reduce runs exactly once."""
+    ts, base_zoom = 32, 3
+    base = tiling.formula_tiles(spark, 8, 8, ts).withColumn(
+        "z", F.lit(base_zoom)
+    )
+    pyr = tiling.pyramid(base, base_zoom, 0)
+    rows = pyr.collect()
+    assert _count_plan_nodes(
+        pyr._jdf.queryExecution(), "FlatMapGroupsInPandas"
+    ) == base_zoom
+    levels = {base_zoom: raster.formula_block(0, 0, 8 * ts, 8 * ts)}
+    for z in range(base_zoom - 1, -1, -1):
+        levels[z] = raster.block_reduce_2x2(levels[z + 1], "average")
+    assert len(rows) == 64 + 16 + 4 + 1
+    for r in rows:
+        np.testing.assert_array_equal(
+            np.frombuffer(r.data, np.uint8).reshape(ts, ts),
+            levels[r.z][r.ty * ts:(r.ty + 1) * ts, r.tx * ts:(r.tx + 1) * ts],
+            err_msg=f"tile z={r.z} {r.tx},{r.ty}",
         )
 
 
