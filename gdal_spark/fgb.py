@@ -673,22 +673,29 @@ def _header_info(buf: bytes):
     return cols, n, node_size, 12 + hlen, 12 + hlen + idx_len, env
 
 
-def _decode_features(buf, start: int, cols, fids=None) -> pd.DataFrame:
-    """fid defaults to the feature's byte offset within the features
-    section — stable across full, ranged, and bbox-pruned scans."""
+def _decode_features(buf, start: int, cols, fid0: int = 0) -> pd.DataFrame:
+    """Walk the size-prefixed framing of ``buf[start:]``. fid is
+    ``fid0`` plus the feature's byte offset from ``start`` — with
+    ``fid0`` the run's own offset, fid is the feature's byte offset
+    within the features section, stable across full, ranged and
+    bbox-pruned scans. A length prefix running past ``buf`` raises
+    ``ValueError``."""
     pos = start
     rows = []
     geoms = []
     fid_list = []
-    k = 0
     while pos < len(buf):
-        (flen,) = struct.unpack_from("<I", buf, pos)
+        flen = int.from_bytes(buf[pos : pos + 4], "little")
+        if pos + 4 + flen > len(buf):
+            raise ValueError(
+                f"FlatGeobuf feature at {pos - start} claims {flen} "
+                f"bytes, {len(buf) - pos - 4} left"
+            )
         f = _root(buf, pos + 4)
         g = f.table(0)
         geoms.append(None if g is None else _geom_to_wkb(g))
         rows.append(_props_decode(f.bytes_(1), cols))
-        fid_list.append(fids[k] if fids is not None else pos - start)
-        k += 1
+        fid_list.append(fid0 + pos - start)
         pos += 4 + flen
     pdf = pd.DataFrame(rows, index=range(len(rows)))
     for c, ct in cols:
@@ -727,6 +734,17 @@ def _spark_schema(cols) -> str:
 # ---------------------------------------------------------------------------
 
 
+def _byte_runs(offs: np.ndarray, ends: np.ndarray, sel: np.ndarray):
+    """Sorted selected feature offsets → [(start, end)] byte runs in
+    the features section; features adjacent in ``offs`` (every
+    feature's sorted offset, ``ends`` its end) merge into one run."""
+    p = np.searchsorted(offs, sel)
+    brk = np.flatnonzero(np.diff(p) != 1) + 1
+    firsts = p[np.r_[0, brk]]
+    lasts = p[np.r_[brk - 1, len(p) - 1]]
+    return [(int(offs[i]), int(ends[j])) for i, j in zip(firsts, lasts)]
+
+
 def read_fgb(
     spark: SparkSession,
     path: str,
@@ -742,104 +760,82 @@ def read_fgb(
     the tasks, so bbox semantics do not depend on index presence.
     Without bbox, the leaf level supplies every feature offset (index
     absent → one framing walk with seeks, the osmpbf pattern). Offsets chunk
-    into ``records_per_task`` ranges; executors seek-read their byte
-    slice and decode. ``opener`` (picklable path→file-like; default
-    shared-FS open — see gdal_spark.io) is the object-store seam:
-    every byte here flows through it, driver and executors alike."""
-    from .io import local_opener
+    into ``records_per_task`` features; each chunk is a few byte runs
+    (one for a full scan) that its task seek-reads and decodes.
+    ``opener`` (picklable path→file-like; default shared-FS open —
+    see gdal_spark.io) is the object-store seam: every byte here
+    flows through it, driver and executors alike."""
+    from .io import local_opener, scan_chunks
 
     opener = opener or local_opener
     with opener(path) as f:
         head = f.read(12)
         (hlen,) = _check_preamble(head)
-        header = f.read(hlen)
-    buf = head + header
-    cols, n, node_size, idx_start, feat_start, _ = _header_info(buf)
-    if n > 0 and node_size > 0:
-        idx_len = sum(_tree_level_counts(n, node_size)) * NODE_BYTES
-        with opener(path) as f:
-            f.seek(idx_start)
-            idx = f.read(idx_len)
-        if bbox is not None:
-            offs = rtree_search(idx, n, node_size, bbox)
-        else:
+        buf = head + f.read(hlen)
+        cols, n, node_size, idx_start, feat_start, _ = _header_info(buf)
+        f.seek(0, 2)
+        feat_len = f.tell() - feat_start
+        indexed = n > 0 and node_size > 0
+        if indexed:
             counts = _tree_level_counts(n, node_size)
-            leaf_start = (sum(counts) - n) * NODE_BYTES
+            f.seek(idx_start)
+            idx = f.read(sum(counts) * NODE_BYTES)
             arr = np.frombuffer(
                 idx, dtype=[("b", "<f8", 4), ("o", "<u8")],
-                count=n, offset=leaf_start,
+                count=n, offset=(sum(counts) - n) * NODE_BYTES,
             )
             offs = np.sort(arr["o"].astype(np.int64))
-    else:
-        # no index: walk the size-prefix framing with seeks
-        offs_l = []
-        with opener(path) as f:
-            f.seek(0, 2)
-            end = f.tell()
-            pos = feat_start
-            while pos < end:
-                f.seek(pos)
-                (flen,) = struct.unpack("<I", f.read(4))
-                offs_l.append(pos - feat_start)
+        else:
+            # no index: walk the size-prefix framing with seeks
+            offs_l = []
+            pos = 0
+            while pos < feat_len:
+                f.seek(feat_start + pos)
+                flen = int.from_bytes(f.read(4), "little")
+                if pos + 4 + flen > feat_len:
+                    raise ValueError(
+                        f"FlatGeobuf feature at {pos} claims {flen} "
+                        f"bytes past the end of the file"
+                    )
+                offs_l.append(pos)
                 pos += 4 + flen
-        offs = np.array(offs_l, dtype=np.int64)
+            offs = np.array(offs_l, dtype=np.int64)
+    sel = (
+        rtree_search(idx, n, node_size, bbox)
+        if indexed and bbox is not None else offs
+    )
     # index-absent bbox semantics match the indexed path: the envelope
     # filter runs post-decode in the tasks (null geometries have no
     # envelope and are excluded, as leaf boxes exclude them)
-    post_bbox = bbox if (bbox is not None and not (
-        n > 0 and node_size > 0
-    )) else None
-    schema = _spark_schema(cols)
-    if len(offs) == 0:
-        return spark.createDataFrame([], schema)
-    n_chunks = (len(offs) + records_per_task - 1) // records_per_task
-    # per-chunk offsets ride DATA rows as compact int64 blobs — never
-    # the task closure (a planet-scale offset table in the closure
-    # would ship with every task); explicit repartition count so AQE
-    # cannot coalesce the tiny-rowcount exchange into one task
-    chunk_rows = [
-        (int(i), c.astype("<i8").tobytes())
-        for i, c in enumerate(np.array_split(offs, n_chunks))
-    ]
-    rng = spark.createDataFrame(
-        chunk_rows, "cid long, offs binary"
-    ).repartitionByRange(min(n_chunks, 64), "cid")
+    post_bbox = bbox if not indexed else None
+    ends = np.append(offs[1:], feat_len)
+    n_chunks = (len(sel) + records_per_task - 1) // records_per_task
+    chunks = [
+        _byte_runs(offs, ends, part)
+        for part in np.array_split(sel, n_chunks)
+    ] if len(sel) else []
 
-    def gen(batches):
-        for b in batches:
-            for ob in b["offs"]:
-                local = np.frombuffer(ob, "<i8")
-                lo, hi = int(local[0]), int(local[-1])
-                with opener(path) as f:
-                    f.seek(feat_start + hi)
-                    (last_len,) = struct.unpack("<I", f.read(4))
-                    f.seek(feat_start + lo)
-                    blob = f.read(hi - lo + 4 + last_len)
-                pieces = []
-                for o in local:
-                    rel = int(o) - lo
-                    (flen,) = struct.unpack_from("<I", blob, rel)
-                    pieces.append(blob[rel: rel + 4 + flen])
-                sub = b"".join(pieces)
-                pdf = _decode_features(
-                    sub, 0, cols, fids=[int(o) for o in local]
-                )
-                if post_bbox is not None:
-                    bx0, by0, bx1, by1 = post_bbox
-                    keep = []
-                    for g in pdf["geometry"]:
-                        if g is None:
-                            keep.append(False)
-                            continue
-                        gx0, gy0, gx1, gy1 = _wkb_bbox(bytes(g))
-                        keep.append(
-                            not (gx1 < bx0 or gx0 > bx1
-                                 or gy1 < by0 or gy0 > by1)
-                        )
-                    pdf = pdf[np.asarray(keep, dtype=bool)]
-                yield pdf
+    def read_chunk(runs):
+        with opener(path) as f:
+            parts = []
+            for a, z in runs:
+                f.seek(feat_start + a)
+                parts.append(_decode_features(f.read(z - a), 0, cols, a))
+        pdf = pd.concat(parts, ignore_index=True)
+        if post_bbox is not None:
+            x0, y0, x1, y1 = post_bbox
+            boxes = [
+                None if g is None else _wkb_bbox(bytes(g))
+                for g in pdf["geometry"]
+            ]
+            pdf = pdf[np.array([
+                b is not None and b[0] <= x1 and b[2] >= x0
+                and b[1] <= y1 and b[3] >= y0
+                for b in boxes
+            ], dtype=bool)]
+        return pdf
 
-    return rng.mapInPandas(gen, schema)
+    return scan_chunks(spark, chunks, read_chunk, _spark_schema(cols))
 
 
 def write_fgb_dir(

@@ -162,24 +162,27 @@ def read_geojson_seq(spark: SparkSession, path: str) -> DataFrame:
     return lines.mapInPandas(gen, _FEATURE_SCHEMA)
 
 
-def read_geojson(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """One FeatureCollection per file, one granule per task."""
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
+def read_geojson(
+    spark: SparkSession, paths: list[str], opener=None
+) -> DataFrame:
+    """One FeatureCollection per file, one file per task. ``opener``
+    (picklable path→file-like; default shared-FS open — see
+    gdal_spark.io) is the object-store seam."""
+    from .io import local_opener, scan_chunks
 
-    def gen(batches):
-        for b in batches:
-            for p in b["path"]:
-                with open(p, "r", encoding="utf-8") as f:
-                    doc = json.load(f)
-                feats = (
-                    doc.get("features", [])
-                    if doc.get("type") == "FeatureCollection"
-                    else [doc]
-                )
-                if feats:
-                    yield _parse_features(feats)
+    opener = opener or local_opener
 
-    return pdf.repartition(len(paths)).mapInPandas(gen, _FEATURE_SCHEMA)
+    def read_chunk(p):
+        with opener(p) as f:
+            doc = json.load(f)
+        feats = (
+            doc.get("features", [])
+            if doc.get("type") == "FeatureCollection"
+            else [doc]
+        )
+        return _parse_features(feats)
+
+    return scan_chunks(spark, list(paths), read_chunk, _FEATURE_SCHEMA)
 
 
 def write_geojson_seq(

@@ -11,17 +11,13 @@ Discovery goes through ``gpkg_contents`` / ``gpkg_geometry_columns``
 like OGRGeoPackageDataSource::Open.
 
 Spark shape:
-* :func:`read_gpkg` — file-parallel: one task per .gpkg granule
-  (imagery/feature tiles are commonly sharded this way), sqlite3
-  opened read-only inside the task, GPB decoded to plain WKB binary
-  so everything downstream (spatial join, layer algebra, GeoParquet
-  sink) consumes it unchanged.
-* :func:`read_gpkg_ranged` — the single-big-file scale path: the
-  driver probes min/max rowid (two O(1) index lookups), builds a
-  JVM-side range DataFrame of rowid chunks, and EACH CHUNK scans
-  ``WHERE rowid BETWEEN ? AND ?`` in its own task — a 500 GB gpkg
-  reads with full cluster parallelism and zero driver row handling
-  (the sqlite B-tree makes each chunk an index range scan).
+* :func:`read_gpkg_ranged` — one .gpkg or many: the driver probes
+  min/max rowid per file, and EACH rowid chunk scans ``WHERE rowid
+  BETWEEN ? AND ?`` in its own task (the sqlite B-tree makes each
+  chunk an index range scan), sqlite3 opened read-only inside the
+  task, GPB decoded to plain WKB binary so everything downstream
+  (spatial join, layer algebra, GeoParquet sink) consumes it
+  unchanged — a 500 GB gpkg reads with full cluster parallelism.
 * :func:`write_gpkg_dir` — partition-parallel sink: one .gpkg per
   partition with spec-required metadata tables
   (gpkg_spatial_ref_sys / gpkg_contents / gpkg_geometry_columns),
@@ -119,41 +115,43 @@ def _curve_safe_bbox(buf: bytes) -> tuple:
 # --------------------------------------------------------------------------
 
 
-def gpkg_tables(path: str) -> list[str]:
+def sqlite_rows(path: str, sql: str, args=()) -> list[tuple]:
+    """``fetchall`` of one query on a read-only connection."""
     con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
     try:
-        rows = con.execute(
-            "SELECT table_name FROM gpkg_contents "
-            "WHERE data_type = 'features' ORDER BY table_name"
-        ).fetchall()
-        return [r[0] for r in rows]
+        return con.execute(sql, args).fetchall()
     finally:
         con.close()
+
+
+def gpkg_tables(path: str) -> list[str]:
+    return [r[0] for r in sqlite_rows(
+        path,
+        "SELECT table_name FROM gpkg_contents "
+        "WHERE data_type = 'features' ORDER BY table_name",
+    )]
 
 
 def gpkg_table_info(path: str, table: str) -> tuple[list[tuple[str, str]], str]:
     """[(column, spark_type)], geometry_column for a feature table."""
-    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-    try:
-        geom_col = con.execute(
-            "SELECT column_name FROM gpkg_geometry_columns "
-            "WHERE table_name = ?", (table,)
-        ).fetchone()
-        if geom_col is None:
-            raise ValueError(f"{table!r} is not a registered feature table")
-        geom_col = geom_col[0]
-        cols = []
-        for _, name, decl, *_ in con.execute(
-            f'PRAGMA table_info("{table}")'
-        ).fetchall():
-            base = (decl or "BLOB").split("(")[0].upper()
-            cols.append(
-                (name, "binary" if name == geom_col
-                 else _SQLITE_TO_SPARK.get(base, "string"))
-            )
-        return cols, geom_col
-    finally:
-        con.close()
+    geom_col = sqlite_rows(
+        path,
+        "SELECT column_name FROM gpkg_geometry_columns "
+        "WHERE table_name = ?", (table,),
+    )
+    if not geom_col:
+        raise ValueError(f"{table!r} is not a registered feature table")
+    geom_col = geom_col[0][0]
+    cols = []
+    for _, name, decl, *_ in sqlite_rows(
+        path, f'PRAGMA table_info("{table}")'
+    ):
+        base = (decl or "BLOB").split("(")[0].upper()
+        cols.append(
+            (name, "binary" if name == geom_col
+             else _SQLITE_TO_SPARK.get(base, "string"))
+        )
+    return cols, geom_col
 
 
 def _select_sql(table: str, cols: list[tuple[str, str]]) -> str:
@@ -175,72 +173,39 @@ def _spark_schema(cols) -> str:
     return "rowid long, " + ", ".join(f"`{c}` {t}" for c, t in cols)
 
 
-def read_gpkg(
-    spark: SparkSession, paths: list[str], table: str
-) -> DataFrame:
-    """File-parallel GeoPackage scan: one task per granule, GPB
-    decoded to plain WKB in the ``geometry`` column. Schema comes
-    from the first granule (homogeneous shards assumed, like every
-    multi-file driver)."""
-    cols, geom_col = gpkg_table_info(paths[0], table)
-    sql = _select_sql(table, cols)
-
-    def gen(batches):
-        for pdf in batches:
-            for p in pdf["path"]:
-                con = sqlite3.connect(f"file:{p}?mode=ro", uri=True)
-                try:
-                    rows = con.execute(sql).fetchall()
-                finally:
-                    con.close()
-                if rows:
-                    yield _rows_to_pdf(rows, cols, geom_col)
-
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-    return pdf.repartition(len(paths)).mapInPandas(
-        gen, _spark_schema(cols)
-    )
-
-
 def read_gpkg_ranged(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     table: str,
     rows_per_task: int = 100_000,
 ) -> DataFrame:
-    """Single-big-file scale path: split by rowid ranges so ONE .gpkg
-    reads with full parallelism — the chunk list is a JVM-side
-    spark.range (never a driver Python list), each task runs an
-    index-range ``WHERE rowid BETWEEN`` scan."""
-    cols, geom_col = gpkg_table_info(path, table)
-    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-    try:
-        lo_hi = con.execute(
-            f'SELECT MIN(rowid), MAX(rowid) FROM "{table}"'
-        ).fetchone()
-    finally:
-        con.close()
-    if lo_hi[0] is None:
-        return spark.createDataFrame([], _spark_schema(cols))
-    lo, hi = int(lo_hi[0]), int(lo_hi[1])
-    n_chunks = (hi - lo) // rows_per_task + 1
+    """Rowid-ranged scan over one .gpkg or a list of them (schema from
+    the first, homogeneous shards assumed): the driver probes each
+    file's MIN/MAX(rowid) (two O(1) index lookups), and each chunk
+    ``(file, rowid_lo, rowid_hi)`` is one task running an index-range
+    ``WHERE rowid BETWEEN`` scan — one big .gpkg reads with full
+    parallelism and zero driver row handling."""
+    from .io import scan_chunks
+
+    paths = [path] if isinstance(path, str) else [str(p) for p in path]
+    cols, geom_col = gpkg_table_info(paths[0], table)
+    chunks = []
+    for p in paths:
+        ((lo, hi),) = sqlite_rows(
+            p, f'SELECT MIN(rowid), MAX(rowid) FROM "{table}"'
+        )
+        if lo is not None:
+            chunks += [
+                (p, a, min(hi, a + rows_per_task - 1))
+                for a in range(lo, hi + 1, rows_per_task)
+            ]
     sql = _select_sql(table, cols) + " WHERE rowid BETWEEN ? AND ?"
 
-    def gen(batches):
-        for pdf in batches:
-            for cid in pdf["id"]:
-                a = lo + int(cid) * rows_per_task
-                b = min(hi, a + rows_per_task - 1)
-                con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-                try:
-                    rows = con.execute(sql, (a, b)).fetchall()
-                finally:
-                    con.close()
-                if rows:
-                    yield _rows_to_pdf(rows, cols, geom_col)
+    def read_chunk(chunk):
+        p, a, b = chunk
+        return _rows_to_pdf(sqlite_rows(p, sql, (a, b)), cols, geom_col)
 
-    rng = spark.range(0, n_chunks, 1, min(n_chunks, 64))
-    return rng.mapInPandas(gen, _spark_schema(cols))
+    return scan_chunks(spark, chunks, read_chunk, _spark_schema(cols))
 
 
 # --------------------------------------------------------------------------

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import mercator
+from .gpkg import sqlite_rows
 
 _MBT_DDL = [
     "CREATE TABLE metadata (name text, value text)",
@@ -212,11 +213,7 @@ def write_mbtiles(
 
 def mbtiles_metadata(path: str) -> dict:
     """The metadata table as a dict (driver-side, header-sized)."""
-    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-    try:
-        return dict(con.execute("SELECT name, value FROM metadata"))
-    finally:
-        con.close()
+    return dict(sqlite_rows(path, "SELECT name, value FROM metadata"))
 
 
 def read_mbtiles(
@@ -229,59 +226,40 @@ def read_mbtiles(
     :func:`write_mbtiles` (mbtilesdataset.cpp GetTile analog). The
     driver reads only MIN/MAX(rowid) + metadata; each task SELECTs
     its own rowid slice, so one planet container fans out without any
-    single reader holding it."""
-    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-    try:
-        lo, hi = con.execute(
-            "SELECT MIN(rowid), MAX(rowid) FROM tiles"
-        ).fetchone()
-        fmt = dict(
-            con.execute("SELECT name, value FROM metadata")
-        ).get("format", "png")
-    finally:
-        con.close()
-    if lo is None:
-        return spark.createDataFrame(
-            [], "z long, tx long, ty long, data binary"
-        )
-    n = partitions or spark.sparkContext.defaultParallelism
-    step = max(1, (hi - lo + 1 + n - 1) // n)
-    ranges = pd.DataFrame(
-        {
-            "lo": list(range(lo, hi + 1, step)),
-            "hi": [min(s + step - 1, hi)
-                   for s in range(lo, hi + 1, step)],
-        }
+    single reader holding it. ``partitions`` (default: the default
+    parallelism) is the number of rowid slices, one task each."""
+    from .io import scan_chunks
+
+    ((lo, hi),) = sqlite_rows(
+        path, "SELECT MIN(rowid), MAX(rowid) FROM tiles"
     )
-    src = spark.createDataFrame(ranges)
+    fmt = mbtiles_metadata(path).get("format", "png")
+    chunks = []
+    if lo is not None:
+        n = partitions or spark.sparkContext.defaultParallelism
+        step = max(1, (hi - lo + 1 + n - 1) // n)
+        chunks = [
+            (a, min(a + step - 1, hi)) for a in range(lo, hi + 1, step)
+        ]
     gunzip = fmt == "pbf"
 
-    def gen(batches):
-        for b in batches:
-            for r in b.itertuples(index=False):
-                con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-                try:
-                    rows = con.execute(
-                        "SELECT zoom_level, tile_column, tile_row, "
-                        "tile_data FROM tiles WHERE rowid BETWEEN ? "
-                        "AND ? ORDER BY rowid",
-                        (int(r.lo), int(r.hi)),
-                    ).fetchall()
-                finally:
-                    con.close()
-                yield pd.DataFrame(
-                    {
-                        "z": [int(z) for z, *_ in rows],
-                        "tx": [int(x) for _, x, *_ in rows],
-                        "ty": [
-                            (1 << int(z)) - 1 - int(y)
-                            for z, _, y, _ in rows
-                        ],
-                        "data": [
-                            gzip.decompress(d) if gunzip else bytes(d)
-                            for *_, d in rows
-                        ],
-                    }
-                )
+    def read_chunk(chunk):
+        rows = sqlite_rows(
+            path,
+            "SELECT zoom_level, tile_column, tile_row, tile_data "
+            "FROM tiles WHERE rowid BETWEEN ? AND ? ORDER BY rowid",
+            chunk,
+        )
+        return pd.DataFrame({
+            "z": [z for z, *_ in rows],
+            "tx": [x for _, x, *_ in rows],
+            "ty": [(1 << z) - 1 - y for z, _, y, _ in rows],  # TMS flip
+            "data": [
+                gzip.decompress(d) if gunzip else bytes(d)
+                for *_, d in rows
+            ],
+        })
 
-    return src.mapInPandas(gen, "z long, tx long, ty long, data binary")
+    return scan_chunks(
+        spark, chunks, read_chunk, "z long, tx long, ty long, data binary"
+    )

@@ -21,10 +21,11 @@ one from-spec wire layer serves both formats.
 Spark shape — the format's killer property is that every OSMData
 blob decodes INDEPENDENTLY: :func:`blob_index` walks only the
 framing (driver-side, ~16 bytes per blob touched via seeks),
-:func:`read_osm_pbf` then fans the (offset, size) list out so each
-task seek-reads and decodes its own blobs — a planet-scale .osm.pbf
-scans with full cluster parallelism and zero feature bytes through
-the driver (the same ranged-scan shape as the COG and .shx paths).
+:func:`read_osm_pbf` then cuts it into byte ranges of consecutive
+blobs, and each task seek-reads and decodes its own range — a
+planet-scale .osm.pbf scans with full cluster parallelism and zero
+feature bytes through the driver (the same ranged-scan shape as the
+COG and .shx paths).
 Tags surface as a canonical-JSON string column (Spark-native access
 via get_json_object, like the GeoJSON source).
 """
@@ -85,22 +86,35 @@ def _frame_blob(btype: str, payload: bytes, compress: bool = True) -> bytes:
     return struct.pack(">i", len(header)) + header + blob
 
 
+def _blob_header(header: bytes) -> tuple[str, int]:
+    """BlobHeader → (type, datasize)."""
+    btype = ""
+    dsize = 0
+    for f, v in _Reader(header).fields():
+        if f == 1:
+            btype = v.decode()
+        elif f == 3:
+            dsize = v
+    return btype, dsize
+
+
 def _read_frames(buf: bytes):
     """Yield (btype, offset, header_end, blob_size) walking only the
-    framing."""
+    framing; a length, BlobHeader or blob running past ``buf`` raises
+    ``ValueError``."""
     pos = 0
-    while pos + 4 <= len(buf):
+    while pos < len(buf):
+        if pos + 4 > len(buf):
+            raise ValueError(f"truncated blob length at {pos}")
         (hlen,) = struct.unpack_from(">i", buf, pos)
-        header = buf[pos + 4 : pos + 4 + hlen]
-        btype = ""
-        dsize = 0
-        for f, v in _Reader(header).fields():
-            if f == 1:
-                btype = v.decode()
-            elif f == 3:
-                dsize = v
-        yield btype, pos, pos + 4 + hlen, dsize
-        pos = pos + 4 + hlen + dsize
+        hend = pos + 4 + hlen
+        if hlen < 0 or hend > len(buf):
+            raise ValueError(f"truncated BlobHeader at {pos}")
+        btype, dsize = _blob_header(buf[pos + 4 : hend])
+        if hend + dsize > len(buf):
+            raise ValueError(f"truncated blob at {pos}")
+        yield btype, pos, hend, dsize
+        pos = hend + dsize
 
 
 def _blob_payload(blob: bytes) -> bytes:
@@ -280,28 +294,31 @@ def blob_index(path: str, opener=None) -> list[tuple[int, int, int]]:
     walks only the framing: read the 4-byte length + BlobHeader, then
     ``seek(datasize, 1)`` past the blob body. Bytes touched on the
     driver are O(blobs × ~16 B), never the file size — a planet-scale
-    ~80 GB .osm.pbf indexes without buffering any feature bytes."""
+    ~80 GB .osm.pbf indexes without buffering any feature bytes. A
+    length, BlobHeader or blob cut short by the end of the file raises
+    ``ValueError``."""
     from .io import local_opener
 
     out = []
     seq = 0
     with (opener or local_opener)(path) as f:
+        f.seek(0, 2)
+        size = f.tell()
+        f.seek(0)
         while True:
             lenbuf = f.read(4)
+            if not lenbuf:
+                break
             if len(lenbuf) < 4:
-                break
+                raise ValueError(f"truncated blob length in {path}")
             (hlen,) = struct.unpack(">i", lenbuf)
-            header = f.read(hlen)
-            if len(header) < hlen:
-                break
-            btype = ""
-            dsize = 0
-            for fld, v in _Reader(header).fields():
-                if fld == 1:
-                    btype = v.decode()
-                elif fld == 3:
-                    dsize = v
+            header = f.read(max(hlen, 0))
+            if hlen < 0 or len(header) < hlen:
+                raise ValueError(f"truncated BlobHeader in {path}")
+            btype, dsize = _blob_header(header)
             hend = f.tell()
+            if hend + dsize > size:
+                raise ValueError(f"truncated blob in {path}")
             if btype == "OSMData":
                 out.append((hend, dsize, seq))
             f.seek(dsize, 1)
@@ -312,90 +329,78 @@ def blob_index(path: str, opener=None) -> list[tuple[int, int, int]]:
 _NODE_SCHEMA = "id long, lon double, lat double, tags string"
 
 
+def _tags_json(tags: dict) -> str:
+    return json.dumps(tags, sort_keys=True, separators=(",", ":"))
+
+
+def _scan_blobs(spark, path, opener, blobs_per_task, decode, schema):
+    """Chunked scan of the OSMData blobs: the driver walks only the
+    framing, and each chunk is the byte range of ``blobs_per_task``
+    consecutive data blobs (plus any other blob framed between them,
+    skipped in the task). ``decode(nodes, ways)`` → pandas frame."""
+    from .io import local_opener, scan_chunks
+
+    opener = opener or local_opener
+    ends = [hend + size for hend, size, _ in blob_index(path, opener)]
+    cuts = [0] + ends[blobs_per_task - 1 :: blobs_per_task]
+    if ends and cuts[-1] != ends[-1]:
+        cuts.append(ends[-1])
+    chunks = list(zip(cuts[:-1], cuts[1:]))
+
+    def read_chunk(chunk):
+        lo, hi = chunk
+        with opener(path) as f:
+            f.seek(lo)
+            buf = f.read(hi - lo)
+        parts = [
+            decode(*decode_primitive_block(
+                _blob_payload(buf[hend : hend + size])
+            ))
+            for btype, _, hend, size in _read_frames(buf)
+            if btype == "OSMData"
+        ]
+        return pd.concat(parts, ignore_index=True)
+
+    return scan_chunks(spark, chunks, read_chunk, schema)
+
+
 def read_osm_pbf(
     spark: SparkSession, path: str, blobs_per_task: int = 4,
     opener=None,
 ) -> DataFrame:
     """Distributed node scan: the driver walks ONLY the blob framing;
-    (offset, size) pairs fan out and each task seek-reads + inflates
-    + decodes its own OSMData blobs. Tags land as canonical JSON.
+    each task seek-reads + inflates + decodes its own
+    ``blobs_per_task`` OSMData blobs. Tags land as canonical JSON.
     ``opener`` (picklable path→file-like; default shared-FS open —
     gdal_spark.io) is the object-store seam for every byte."""
-    from .io import local_opener
 
-    opener = opener or local_opener
-    idx = blob_index(path, opener=opener)
+    def decode(nodes, _ways):
+        return pd.DataFrame({
+            "id": nodes["id"],
+            "lon": nodes["lon"],
+            "lat": nodes["lat"],
+            "tags": [_tags_json(t) for t in nodes["tags"]],
+        })
 
-    def gen(batches):
-        for pdf in batches:
-            for off, size in zip(pdf["off"], pdf["size"]):
-                with opener(path) as f:
-                    f.seek(int(off))
-                    blob = f.read(int(size))
-                nodes, _ways = decode_primitive_block(
-                    _blob_payload(blob)
-                )
-                if nodes["id"]:
-                    yield pd.DataFrame(
-                        {
-                            "id": nodes["id"],
-                            "lon": nodes["lon"],
-                            "lat": nodes["lat"],
-                            "tags": [
-                                json.dumps(
-                                    t, sort_keys=True,
-                                    separators=(",", ":"),
-                                )
-                                for t in nodes["tags"]
-                            ],
-                        }
-                    )
-
-    pdf = spark.createDataFrame(
-        [(o, s) for o, s, _ in idx], "off long, size long"
-    )
-    n_parts = max(1, len(idx) // blobs_per_task)
-    return pdf.repartition(min(n_parts, 256)).mapInPandas(
-        gen, _NODE_SCHEMA
+    return _scan_blobs(
+        spark, path, opener, blobs_per_task, decode, _NODE_SCHEMA
     )
 
 
 def read_osm_ways(
     spark: SparkSession, path: str, opener=None
 ) -> DataFrame:
-    """Distributed way scan: (id, refs array<long>, tags json)."""
-    from .io import local_opener
+    """Distributed way scan, one blob per task: (id, refs
+    array<long>, tags json)."""
 
-    opener = opener or local_opener
-    idx = blob_index(path, opener=opener)
+    def decode(_nodes, ways):
+        return pd.DataFrame({
+            "id": [w[0] for w in ways],
+            "refs": [w[1] for w in ways],
+            "tags": [_tags_json(w[2]) for w in ways],
+        })
 
-    def gen(batches):
-        for pdf in batches:
-            for off, size in zip(pdf["off"], pdf["size"]):
-                with opener(path) as f:
-                    f.seek(int(off))
-                    blob = f.read(int(size))
-                _nodes, ways = decode_primitive_block(
-                    _blob_payload(blob)
-                )
-                if ways:
-                    yield pd.DataFrame(
-                        {
-                            "id": [w[0] for w in ways],
-                            "refs": [w[1] for w in ways],
-                            "tags": [
-                                json.dumps(
-                                    w[2], sort_keys=True,
-                                    separators=(",", ":"),
-                                )
-                                for w in ways
-                            ],
-                        }
-                    )
-
-    pdf = spark.createDataFrame(
-        [(o, s) for o, s, _ in idx], "off long, size long"
-    )
-    return pdf.repartition(min(max(1, len(idx)), 64)).mapInPandas(
-        gen, "id long, refs array<long>, tags string"
+    return _scan_blobs(
+        spark, path, opener, 1, decode,
+        "id long, refs array<long>, tags string",
     )

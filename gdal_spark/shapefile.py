@@ -21,12 +21,11 @@ heuristic (ogr/ogrgeometryfactory.cpp:1997-2064), evaluated with the
 engine's own ray-cast PIP.
 
 Spark shape:
-* :func:`read_shapefile` — file-parallel (one granule per task).
-* :func:`read_shapefile_ranged` — the big-file scale path: the
-  driver reads ONLY the .shx (8 bytes/record) to enumerate record
-  ranges JVM-side; each task seek-reads its slice of .shp/.dbf —
-  a multi-GB shapefile scans with full parallelism and zero
-  record bytes through the driver.
+* :func:`read_shapefile_ranged` — one path or many: the driver reads
+  ONLY each .shx size and the first .dbf header; each record range
+  is one task that seek-reads its slice of .shx/.shp/.dbf — a
+  multi-GB shapefile scans with full parallelism and zero record
+  bytes through the driver.
 * :func:`write_shapefile_dir` — partition-parallel sink (one
   .shp/.shx/.dbf triple per partition, manifest per file) — which
   also makes every test fixture self-contained.
@@ -269,17 +268,33 @@ def write_dbf(pdf: pd.DataFrame) -> bytes:
     return bytes(out)
 
 
-def read_dbf(buf: bytes) -> pd.DataFrame:
-    n_rec, hdr_size, rec_size = struct.unpack_from("<IHH", buf, 4)
+def _dbf_fields(buf: bytes) -> list[tuple[str, str, int, int]]:
+    """The 32-byte field descriptors of a .dbf header → [(name, type,
+    length, decimals)]."""
     fields = []
     pos = 32
-    while buf[pos] != 0x0D:
+    while buf[pos : pos + 1] != b"\x0d":
+        if pos + 32 >= len(buf):
+            raise ValueError(".dbf header has no field terminator")
         name = buf[pos : pos + 11].split(b"\x00")[0].decode("ascii")
-        typ = chr(buf[pos + 11])
-        ln = buf[pos + 16]
-        dec = buf[pos + 17]
-        fields.append((name, typ, ln, dec))
+        fields.append((name, chr(buf[pos + 11]), buf[pos + 16], buf[pos + 17]))
         pos += 32
+    return fields
+
+
+def _dbf_spark_type(typ: str, dec: int) -> str:
+    """C→string, L→boolean, N with decimals or F→double, N without
+    decimals→long, anything else→string (the raw text)."""
+    if typ == "N":
+        return "double" if dec else "long"
+    return {"C": "string", "L": "boolean", "F": "double"}.get(typ, "string")
+
+
+def read_dbf(buf: bytes) -> pd.DataFrame:
+    """dBase III bytes → attribute frame, typed per field descriptor
+    (:func:`_dbf_spark_type`); a blank numeric value reads as null."""
+    n_rec, hdr_size, rec_size = struct.unpack_from("<IHH", buf, 4)
+    fields = _dbf_fields(buf[:hdr_size])
     cols: dict[str, list] = {f[0]: [] for f in fields}
     for r in range(n_rec):
         rp = hdr_size + r * rec_size
@@ -290,167 +305,138 @@ def read_dbf(buf: bytes) -> pd.DataFrame:
             raw = buf[fp : fp + ln].decode("ascii", "replace")
             fp += ln
             s = raw.strip()
-            if typ == "C":
+            kind = _dbf_spark_type(typ, dec)
+            if kind == "string":
                 cols[name].append(raw.rstrip())
-            elif typ == "L":
+            elif kind == "boolean":
                 cols[name].append(s in ("T", "t", "Y", "y"))
             elif not s:
                 cols[name].append(None)
-            elif dec or typ == "F":
-                cols[name].append(float(s))
             else:
-                cols[name].append(int(s))
-    return pd.DataFrame(cols)
+                cols[name].append(float(s) if kind == "double" else int(s))
+    return pd.DataFrame({
+        name: pd.array(cols[name], dtype="Int64")
+        if _dbf_spark_type(typ, dec) == "long" else cols[name]
+        for name, typ, _, dec in fields
+    })
 
 
-def _iter_shp_records(shp: bytes):
-    pos = 100
-    while pos + 8 <= len(shp):
-        recno, clen = struct.unpack_from(">2i", shp, pos)
-        payload = shp[pos + 8 : pos + 8 + 2 * clen]
-        yield recno, payload
-        pos += 8 + 2 * clen
+def _read_dbf_head(f) -> bytes:
+    """The .dbf header (fixed part + field descriptors) from an open
+    file positioned at 0."""
+    head = f.read(32)
+    hdr_size = int.from_bytes(head[8:10], "little")
+    head += f.read(max(0, hdr_size - 32))
+    if len(head) < max(hdr_size, 33):
+        raise ValueError(f"truncated .dbf header: {len(head)} bytes")
+    return head
+
+
+def _open_optional(opener, path: str):
+    try:
+        return opener(path)
+    except FileNotFoundError:
+        return None
 
 
 # ------------------------------------------------------------------
-# Spark sources / sink
+# Spark source / sink
 # ------------------------------------------------------------------
 
 
-def _granule_pdf(shp: bytes, dbf: bytes | None) -> pd.DataFrame:
-    geoms = []
-    for _, payload in _iter_shp_records(shp):
-        geoms.append(shape_to_wkb(payload))
+def _shx_records(opener, shx_path: str) -> int:
+    """Record count from the .shx size alone (100-byte header + 8
+    bytes per record)."""
+    with opener(shx_path) as f:
+        f.seek(0, 2)
+        size = f.tell()
+    if size < 100 or (size - 100) % 8:
+        raise ValueError(f"{shx_path}: length {size} is not 100 + 8k")
+    return (size - 100) // 8
+
+
+def _schema(opener, path: str) -> str:
+    """Spark DDL from the .dbf field descriptors (no record read)."""
+    parts = ["fid long"]
+    dbf = _open_optional(opener, os.path.splitext(path)[0] + ".dbf")
     if dbf is not None:
-        pdf = read_dbf(dbf)
-        pdf = pdf.iloc[: len(geoms)].copy()
-    else:
-        pdf = pd.DataFrame(index=range(len(geoms)))
-    pdf.insert(0, "fid", range(len(geoms)))
-    pdf["geometry"] = geoms
-    return pdf
-
-
-def read_shapefile(
-    spark: SparkSession, paths: list[str], schema: str | None = None
-) -> DataFrame:
-    """File-parallel shapefile scan: one .shp(+.dbf) granule per
-    task. ``schema`` (Spark DDL for the attribute columns) comes from
-    the first granule when omitted."""
-    if schema is None:
-        with open(paths[0], "rb") as f:
-            shp0 = f.read()
-        dbf_p = os.path.splitext(paths[0])[0] + ".dbf"
-        dbf0 = open(dbf_p, "rb").read() if os.path.exists(dbf_p) else None
-        pdf0 = _granule_pdf(shp0, dbf0)
-        parts = ["fid long"]
-        for c in pdf0.columns:
-            if c in ("fid", "geometry"):
-                continue
-            k = pdf0[c].dtype.kind
-            t = {"i": "long", "u": "long", "f": "double",
-                 "b": "boolean"}.get(k, "string")
-            parts.append(f"`{c}` {t}")
-        parts.append("geometry binary")
-        schema = ", ".join(parts)
-
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def gen(batches):
-        for b in batches:
-            for p in b["path"]:
-                with open(p, "rb") as f:
-                    shp = f.read()
-                dbf_p = os.path.splitext(p)[0] + ".dbf"
-                dbf = (
-                    open(dbf_p, "rb").read()
-                    if os.path.exists(dbf_p) else None
-                )
-                yield _granule_pdf(shp, dbf)
-
-    return pdf.repartition(len(paths)).mapInPandas(gen, schema)
+        with dbf as f:
+            head = _read_dbf_head(f)
+        parts += [
+            f"`{name}` {_dbf_spark_type(typ, dec)}"
+            for name, typ, _, dec in _dbf_fields(head)
+        ]
+    return ", ".join(parts + ["geometry binary"])
 
 
 def read_shapefile_ranged(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     records_per_task: int = 100_000,
     schema: str | None = None,
     opener=None,
 ) -> DataFrame:
-    """Big-file scale path: the driver reads ONLY the .shx
-    (8 bytes/record) for the record index; tasks seek-read their
-    .shp slice (and their fixed-stride .dbf slice). Record ranges
-    enumerate JVM-side via spark.range. ``opener`` (picklable
-    path→file-like; default shared-FS open — gdal_spark.io) is the
-    object-store seam for every byte, driver and executors."""
-    from .io import local_opener
+    """Ranged shapefile scan over one path or a list of paths. The
+    driver reads only each .shx size and the first .dbf header (the
+    schema, homogeneous shards assumed); each chunk ``(file,
+    first_rec, end_rec)`` is one task that seek-reads its own .shx
+    slice, then its .shp and fixed-stride .dbf slices. ``opener``
+    (picklable path→file-like; default shared-FS open —
+    gdal_spark.io) is the object-store seam for every byte, driver
+    and executors."""
+    from .io import local_opener, scan_chunks
 
     opener = opener or local_opener
-    shx_p = os.path.splitext(path)[0] + ".shx"
-    dbf_p = os.path.splitext(path)[0] + ".dbf"
-    with opener(shx_p) as f:
-        shx = f.read()
-    n_rec = (len(shx) - 100) // 8
-    idx = np.frombuffer(shx, ">i4", 2 * n_rec, 100).reshape(n_rec, 2)
-    has_dbf = os.path.exists(dbf_p)
-    if has_dbf:
-        with opener(dbf_p) as f:
-            dbf_head = f.read(32 + 32 * 128)
-        hdr_size, rec_size = struct.unpack_from("<HH", dbf_head, 8)
-        fields_blob = dbf_head[: hdr_size]
+    paths = [path] if isinstance(path, str) else [str(p) for p in path]
+    chunks = []
+    for p in paths:
+        n_rec = _shx_records(opener, os.path.splitext(p)[0] + ".shx")
+        chunks += [
+            (p, a, min(n_rec, a + records_per_task))
+            for a in range(0, n_rec, records_per_task)
+        ]
     if schema is None:
-        probe = read_shapefile(spark, [path]).limit(0)
-        schema = ", ".join(
-            f"`{n}` {t}" for n, t in probe.dtypes
-        )
-    n_chunks = (n_rec + records_per_task - 1) // records_per_task
-    rng = spark.range(0, n_chunks, 1, min(max(n_chunks, 1), 64))
-    idx_b = idx.tobytes()  # ships in the closure (8 B/record)
+        schema = _schema(opener, paths[0])
 
-    def gen(batches):
-        index = np.frombuffer(idx_b, ">i4").reshape(-1, 2)
-        for b in batches:
-            for cid in b["id"]:
-                a = int(cid) * records_per_task
-                z = min(n_rec, a + records_per_task)
-                if a >= z:
-                    continue
-                start = int(index[a, 0]) * 2
-                end = int(index[z - 1, 0] + 4 + index[z - 1, 1]) * 2
-                with opener(path) as f:
-                    f.seek(start)
-                    blob = f.read(end - start)
-                geoms = []
-                pos = 0
-                for r in range(a, z):
-                    clen = int(index[r, 1])
-                    geoms.append(
-                        shape_to_wkb(blob[pos + 8 : pos + 8 + 2 * clen])
-                    )
-                    pos += 8 + 2 * clen
-                if has_dbf:
-                    with opener(dbf_p) as f:
-                        f.seek(hdr_size + a * rec_size)
-                        recs = f.read((z - a) * rec_size)
-                    dbf_blob = (
-                        fields_blob
-                        + recs + b"\x1a"
-                    )
-                    # patch the record count for the slice parser
-                    dbf_blob = (
-                        dbf_blob[:4]
-                        + struct.pack("<I", z - a)
-                        + dbf_blob[8:]
-                    )
-                    pdf = read_dbf(dbf_blob)
-                else:
-                    pdf = pd.DataFrame(index=range(z - a))
-                pdf.insert(0, "fid", range(a, z))
-                pdf["geometry"] = geoms
-                yield pdf
+    def read_chunk(chunk):
+        p, a, z = chunk
+        base = os.path.splitext(p)[0]
+        with opener(base + ".shx") as f:
+            f.seek(100 + 8 * a)
+            raw = f.read(8 * (z - a))
+        if len(raw) < 8 * (z - a):
+            raise ValueError(f"{base}.shx: truncated record index")
+        index = np.frombuffer(raw, ">i4").reshape(-1, 2).astype(np.int64)
+        start = int(index[0, 0]) * 2
+        end = int(index[-1, 0] + 4 + index[-1, 1]) * 2
+        with opener(p) as f:
+            f.seek(start)
+            blob = f.read(max(0, end - start))
+        geoms = []
+        for off, clen in index:
+            rel = int(off) * 2 - start
+            if rel < 0 or clen < 0 or rel + 8 + 2 * clen > len(blob):
+                raise ValueError(f"{p}: .shx entry outside the .shp")
+            geoms.append(shape_to_wkb(blob[rel + 8 : rel + 8 + 2 * clen]))
+        dbf = _open_optional(opener, base + ".dbf")
+        if dbf is None:
+            pdf = pd.DataFrame(index=range(z - a))
+        else:
+            with dbf as f:
+                head = _read_dbf_head(f)
+                (rec_size,) = struct.unpack_from("<H", head, 10)
+                f.seek(len(head) + a * rec_size)
+                recs = f.read((z - a) * rec_size)
+            if len(recs) < (z - a) * rec_size:
+                raise ValueError(f"{base}.dbf: truncated records")
+            # patch the record count for the slice parser
+            count = struct.pack("<I", z - a)
+            pdf = read_dbf(head[:4] + count + head[8:] + recs)
+        pdf.insert(0, "fid", range(a, z))
+        pdf["geometry"] = geoms
+        return pdf
 
-    return rng.mapInPandas(gen, schema)
+    return scan_chunks(spark, chunks, read_chunk, schema)
 
 
 def write_shapefile_dir(

@@ -2,6 +2,7 @@
 Hilbert R-tree exactness, ranged==file parity, granule sink."""
 
 import os
+import struct
 
 import numpy as np
 import pandas as pd
@@ -328,3 +329,29 @@ def test_read_fgb_bad_header_raises_value_error(spark, tmp_path, case):
     open(p, "wb").write(_corrupt_and_truncated()[case])
     with pytest.raises(ValueError, match="FlatGeobuf"):
         fgb.read_fgb(spark, p)
+
+
+def _overlong_first_prefix(index: bool) -> bytes:
+    """A 5-feature file whose first length prefix claims 1 MB."""
+    pdf = _mixed_pdf().iloc[:5].reset_index(drop=True)
+    blob = bytearray(fgb.fgb_encode(pdf, index=index))
+    *_, feat_start, _ = fgb._header_info(bytes(blob))
+    struct.pack_into("<I", blob, feat_start, 1 << 20)
+    return bytes(blob)
+
+
+def test_fgb_decode_overlong_length_prefix_raises():
+    with pytest.raises(ValueError, match="claims 1048576 bytes"):
+        fgb.fgb_decode(_overlong_first_prefix(index=False))
+
+
+def test_read_fgb_overlong_length_prefix_raises(spark, tmp_path):
+    p = str(tmp_path / "noidx.fgb")
+    open(p, "wb").write(_overlong_first_prefix(index=False))
+    with pytest.raises(ValueError, match="claims 1048576 bytes"):
+        fgb.read_fgb(spark, p)
+    # indexed: the task's run walk hits the same check
+    p = str(tmp_path / "idx.fgb")
+    open(p, "wb").write(_overlong_first_prefix(index=True))
+    with pytest.raises(Exception, match="claims 1048576 bytes"):
+        fgb.read_fgb(spark, p).collect()

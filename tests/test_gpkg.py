@@ -71,7 +71,7 @@ def test_write_read_round_trip(spark, tmp_path):
 
     assert gpkg.gpkg_tables(manifest["path"].iloc[0]) == ["feat"]
 
-    back = gpkg.read_gpkg(
+    back = gpkg.read_gpkg_ranged(
         spark, sorted(manifest["path"]), "feat"
     ).toPandas()
     assert len(back) == 40
@@ -86,26 +86,26 @@ def test_write_read_round_trip(spark, tmp_path):
     assert got == want
 
 
+def _rows(pdf):
+    return [
+        (int(r["fid_src"]), r["name"], r["score"], bytes(r["geometry"]))
+        for _, r in pdf.sort_values("fid_src").iterrows()
+    ]
+
+
 def test_ranged_scan_equals_file_scan(spark, tmp_path):
+    """10-row chunks, the whole file as one chunk and the written
+    source frame all agree."""
     out = str(tmp_path / "gp1")
     df = _feature_df(spark, 57).coalesce(1)
     manifest = gpkg.write_gpkg_dir(df, out, table="feat").toPandas()
     path = manifest["path"].iloc[0]
-    a = (
-        gpkg.read_gpkg(spark, [path], "feat")
-        .orderBy("fid_src")
-        .toPandas()
-    )
-    b = (
-        gpkg.read_gpkg_ranged(spark, path, "feat", rows_per_task=10)
-        .orderBy("fid_src")
-        .toPandas()
-    )
+    a = gpkg.read_gpkg_ranged(spark, path, "feat").toPandas()
+    b = gpkg.read_gpkg_ranged(
+        spark, path, "feat", rows_per_task=10
+    ).toPandas()
     assert len(b) == 57
-    assert a["fid_src"].tolist() == b["fid_src"].tolist()
-    assert [bytes(x) for x in a["geometry"]] == [
-        bytes(x) for x in b["geometry"]
-    ]
+    assert _rows(a) == _rows(b) == _rows(df.toPandas())
 
 
 def test_downstream_composition(spark, tmp_path):
@@ -113,16 +113,21 @@ def test_downstream_composition(spark, tmp_path):
     from gdal_spark import geoparquet as gpq
 
     out = str(tmp_path / "gp2")
-    manifest = gpkg.write_gpkg_dir(
-        _feature_df(spark, 8).coalesce(1), out
-    ).toPandas()
-    back = gpkg.read_gpkg(spark, [manifest["path"].iloc[0]], "features")
-    boxes = [
-        gpq.wkb_bbox(bytes(r["geometry"]))
+    src = _feature_df(spark, 8).coalesce(1)
+    manifest = gpkg.write_gpkg_dir(src, out).toPandas()
+    back = gpkg.read_gpkg_ranged(
+        spark, manifest["path"].iloc[0], "features"
+    )
+    boxes = {
+        int(r["fid_src"]): gpq.wkb_bbox(bytes(r["geometry"]))
         for r in back.collect()
-    ]
-    assert len(boxes) == 8
-    assert all(b[0] <= b[2] and b[1] <= b[3] for b in boxes)
+    }
+    want = {
+        int(r["fid_src"]): gpq.wkb_bbox(bytes(r["geometry"]))
+        for r in src.collect()
+    }
+    assert boxes == want
+    assert all(b[0] <= b[2] and b[1] <= b[3] for b in boxes.values())
 
 
 def test_write_gpkg_dir_curve_geometry(spark, tmp_path):
@@ -132,7 +137,7 @@ def test_write_gpkg_dir_curve_geometry(spark, tmp_path):
     import pandas as pd
 
     from gdal_spark import curves
-    from gdal_spark.gpkg import gpb_to_wkb, read_gpkg, write_gpkg_dir
+    from gdal_spark.gpkg import read_gpkg_ranged, write_gpkg_dir
 
     cp = curves.curvepolygon([
         curves.circularstring([[3.0, 0.0], [-3.0, 0.0], [3.0, 0.0]])
@@ -144,7 +149,8 @@ def test_write_gpkg_dir_curve_geometry(spark, tmp_path):
         df, str(tmp_path / "curved_out"), table="t"
     ).toPandas()
     assert manifest["n_rows"].sum() == 1
-    got = read_gpkg(spark, list(manifest["path"]), "t").toPandas()
+    got = read_gpkg_ranged(spark, list(manifest["path"]), "t").toPandas()
+    assert got["k"].tolist() == [1]
     assert bytes(got["geometry"].iloc[0]) == cp
     # envelope written from the densified arc: spans ±3 in x AND y
     import sqlite3

@@ -81,9 +81,7 @@ def test_read_gtiff_ranged_all_bytes_via_opener(spark, tmp_path):
 
 
 def test_read_shapefile_ranged_all_bytes_via_opener(spark, tmp_path):
-    from gdal_spark.shapefile import (
-        read_shapefile, read_shapefile_ranged, write_shp,
-    )
+    from gdal_spark.shapefile import read_shapefile_ranged, write_shp
 
     geoms = [wkb.point(float(i), float(2 * i)) for i in range(50)]
     shp, shx = write_shp(geoms)
@@ -99,6 +97,70 @@ def test_read_shapefile_ranged_all_bytes_via_opener(spark, tmp_path):
     ).toPandas()
     assert len(out) == 50
     assert bytes(out.sort_values("fid")["geometry"].iloc[7]) == geoms[7]
+
+
+def test_read_shapefile_ranged_schema_via_opener(spark, tmp_path):
+    """No ``schema=``: the .dbf descriptors are read through the
+    opener too."""
+    from gdal_spark.shapefile import (
+        read_shapefile_ranged, write_dbf, write_shp,
+    )
+
+    geoms = [wkb.point(float(i), 1.0) for i in range(30)]
+    shp, shx = write_shp(geoms)
+    dbf = write_dbf(pd.DataFrame({
+        "name": [f"n{i}" for i in range(30)], "rank": range(30),
+    }))
+    base = str(tmp_path / "attrs")
+    for ext, blob in ((".shp", shp), (".shx", shx), (".dbf", dbf)):
+        _shadow(tmp_path, "attrs" + ext, blob)
+    out = read_shapefile_ranged(
+        spark, base + ".shp", records_per_task=7, opener=PrefixOpener()
+    ).toPandas().sort_values("fid")
+    assert out["name"].tolist() == [f"n{i}" for i in range(30)]
+    assert out["rank"].tolist() == list(range(30))
+    assert [bytes(g) for g in out["geometry"]] == geoms
+
+
+def test_read_geojson_via_opener(spark, tmp_path):
+    import json
+
+    from gdal_spark.geojson import read_geojson
+
+    fc = {"type": "FeatureCollection", "features": [
+        {"type": "Feature", "id": i, "properties": {"i": i},
+         "geometry": {"type": "Point", "coordinates": [i, 0]}}
+        for i in range(4)
+    ]}
+    p = _shadow(tmp_path, "fc.geojson", json.dumps(fc).encode())
+    out = read_geojson(spark, [p], opener=PrefixOpener()).toPandas()
+    assert sorted(out["feature_id"]) == ["0", "1", "2", "3"]
+    with pytest.raises(Exception, match="No such file"):
+        read_geojson(spark, [p]).collect()
+
+
+def test_tile_index_via_opener(spark, tmp_path):
+    from gdal_spark.gtiff import tiff_encode, tile_index
+
+    a = np.zeros((16, 24), dtype=np.uint8)
+    p = _shadow(tmp_path, "t.tif", tiff_encode(
+        a, geotransform=(5.0, 1.0, 0.0, 20.0, 0.0, -1.0), epsg=4326,
+    ))
+    (r,) = tile_index(spark, [p], opener=PrefixOpener()).collect()
+    assert (r.width, r.height, r.epsg) == (24, 16, 4326)
+    assert (r.minx, r.maxy) == (5.0, 20.0)
+
+
+def test_read_osm_ways_via_opener(spark, tmp_path):
+    from gdal_spark.osmpbf import read_osm_ways, write_osm_pbf
+
+    nodes = [(i, float(i), 0.0, {}) for i in range(1, 4)]
+    ways = [(9, [1, 2, 3], {"highway": "path"})]
+    real = str(tmp_path / "w.osm.pbf.shadow")
+    write_osm_pbf(real, nodes=nodes, ways=ways)
+    p = real[: -len(".shadow")]
+    (w,) = read_osm_ways(spark, p, opener=PrefixOpener()).collect()
+    assert (w.id, list(w.refs)) == (9, [1, 2, 3])
 
 
 def test_read_osm_pbf_all_bytes_via_opener(spark, tmp_path):

@@ -165,3 +165,36 @@ def test_blob_index_touches_only_framing_bytes(tmp_path):
     # below the file size
     assert counted["n"] < min(file_size // 2, 21 * 64)
     assert counted["n"] < file_size
+
+
+def _cut_file(tmp_path, cut):
+    """Header + 5 data blobs, truncated ``cut(last_frame_start)``
+    bytes in."""
+    nodes, ways = _fixture(500)
+    p = str(tmp_path / "cut.osm.pbf")
+    osmpbf.write_osm_pbf(p, nodes, ways, nodes_per_block=100)
+    with open(p, "rb") as f:
+        buf = f.read()
+    last = list(osmpbf._read_frames(buf))[-1][1]
+    with open(p, "wb") as f:
+        f.write(buf[: cut(last)])
+    return p
+
+
+@pytest.mark.parametrize(
+    "cut, what",
+    [
+        (lambda last: last + 2, "blob length"),
+        (lambda last: last + 4 + 3, "BlobHeader"),
+        (lambda last: last - 1, "blob"),
+    ],
+    ids=["length", "header", "body"],
+)
+def test_blob_index_truncated_file_raises(tmp_path, cut, what):
+    p = _cut_file(tmp_path, cut)
+    with pytest.raises(ValueError, match=f"truncated {what}"):
+        osmpbf.blob_index(p)
+    with open(p, "rb") as f:
+        buf = f.read()
+    with pytest.raises(ValueError, match=f"truncated {what}"):
+        list(osmpbf._read_frames(buf))

@@ -134,7 +134,7 @@ def test_sink_source_round_trip(spark, tmp_path):
                                     .col("src") % 3))
     manifest = shpf.write_shapefile_dir(df, out).toPandas()
     assert manifest["n_rows"].sum() == 30
-    back = shpf.read_shapefile(
+    back = shpf.read_shapefile_ranged(
         spark, sorted(manifest["path"])
     ).toPandas()
     assert len(back) == 30
@@ -149,18 +149,66 @@ def test_sink_source_round_trip(spark, tmp_path):
     assert got == want
 
 
+def _rows(pdf):
+    return [
+        (int(r["src"]), r["name"], r["score"], bytes(r["geometry"]))
+        for _, r in pdf.sort_values("src").iterrows()
+    ]
+
+
 def test_ranged_scan_matches_file_scan(spark, tmp_path):
+    """10-record chunks, the whole file as one chunk and the written
+    source frame all agree; fid is the record number."""
     out = str(tmp_path / "shp1")
     df = _df(spark, 57).coalesce(1)
     manifest = shpf.write_shapefile_dir(df, out).toPandas()
     path = manifest["path"].iloc[0]
-    a = shpf.read_shapefile(spark, [path]).orderBy("src").toPandas()
+    a = shpf.read_shapefile_ranged(spark, path).toPandas()
     b = shpf.read_shapefile_ranged(
         spark, path, records_per_task=10
-    ).orderBy("src").toPandas()
+    ).toPandas()
     assert len(b) == 57
-    assert a["src"].tolist() == b["src"].tolist()
-    assert [bytes(x) for x in a["geometry"]] == [
-        bytes(x) for x in b["geometry"]
-    ]
-    assert a["name"].tolist() == b["name"].tolist()
+    assert sorted(b["fid"]) == list(range(57))
+    assert _rows(a) == _rows(b) == _rows(df.toPandas())
+
+
+def test_dbf_integer_field_with_blank_reads_long_null(spark, tmp_path):
+    """N(18,0) types as long from its descriptor; a blank value is
+    null, not a reason to widen the column to double."""
+    import pandas as pd
+
+    dbf = bytearray(shpf.write_dbf(pd.DataFrame({"n": [1, 2, 3]})))
+    hdr_size, rec_size = struct.unpack_from("<HH", dbf, 8)
+    dbf[hdr_size + rec_size + 1 : hdr_size + 2 * rec_size] = b" " * 18
+    shp, shx = shpf.write_shp([wkb.point(float(i), 0.0) for i in range(3)])
+    base = str(tmp_path / "blank")
+    for ext, blob in ((".shp", shp), (".shx", shx), (".dbf", bytes(dbf))):
+        with open(base + ext, "wb") as f:
+            f.write(blob)
+    df = shpf.read_shapefile_ranged(spark, base + ".shp")
+    assert dict(df.dtypes)["n"] == "bigint"
+    assert [r["n"] for r in df.orderBy("fid").collect()] == [1, None, 3]
+
+
+def test_shx_bad_length_raises(spark, tmp_path):
+    shp, shx = shpf.write_shp([wkb.point(1.0, 2.0)] * 3)
+    base = str(tmp_path / "bad")
+    with open(base + ".shp", "wb") as f:
+        f.write(shp)
+    with open(base + ".shx", "wb") as f:
+        f.write(shx + b"\x00" * 4)
+    with pytest.raises(ValueError, match="100 \\+ 8k"):
+        shpf.read_shapefile_ranged(spark, base + ".shp")
+
+
+def test_truncated_dbf_raises(spark, tmp_path):
+    import pandas as pd
+
+    shp, shx = shpf.write_shp([wkb.point(1.0, 2.0)] * 3)
+    dbf = shpf.write_dbf(pd.DataFrame({"s": ["aaaa", "bbbb", "cccc"]}))
+    base = str(tmp_path / "short")
+    for ext, blob in ((".shp", shp), (".shx", shx), (".dbf", dbf[:-3])):
+        with open(base + ext, "wb") as f:
+            f.write(blob)
+    with pytest.raises(Exception, match="truncated records"):
+        shpf.read_shapefile_ranged(spark, base + ".shp").collect()
