@@ -120,11 +120,8 @@ def _rd_geom(r: _Rd):
     order = r.buf[r.pos]
     fmt = "<" if order == 1 else ">"
     (code,) = struct.unpack_from(fmt + "I", r.buf, r.pos + 1)
-    if code & 0x20000000:  # EWKB SRID
-        r.pos += 4
-        code &= ~0x20000000
-    gtype = code % 1000
-    r.pos += 5
+    gtype, has_srid = wkb.xy_type(code)
+    r.pos += 9 if has_srid else 5  # order byte, type word, EWKB SRID
     if gtype == wkb.POINT:
         xy = struct.unpack_from(fmt + "dd", r.buf, r.pos)
         r.pos += 16

@@ -22,19 +22,17 @@ implements the PUBLIC format specification
 Scale shape mirrors shapefile.py/gtiff.py: the DRIVER reads only the
 magic + header (+ the index when a bbox is given — never feature
 bytes); executors seek-read their feature byte ranges. The writer is
-granule-parallel (one .fgb per partition/group inside the task).
+granule-parallel (one .fgb per input partition, io.write_granules).
 Shared-FS contract, like every ranged reader here.
 """
 
 from __future__ import annotations
 
-import os
 import struct
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import wkb
 
@@ -460,25 +458,6 @@ def _geom_to_wkb(g: _FTable) -> bytes:
     raise ValueError(f"unsupported FlatGeobuf geometry type {gt}")
 
 
-def _wkb_bbox(gwkb: bytes) -> tuple[float, float, float, float]:
-    gtype, payload = wkb.parse(gwkb)
-    if gtype == wkb.POINT:
-        x, y = payload
-        return x, y, x, y
-    if gtype in (wkb.LINESTRING, wkb.MULTIPOINT):
-        a = np.asarray(payload, dtype=np.float64)
-    elif gtype == wkb.POLYGON:
-        a = np.vstack(payload)
-    elif gtype == wkb.MULTILINESTRING:
-        a = np.vstack(payload)
-    else:  # MULTIPOLYGON
-        a = np.vstack([r for rings in payload for r in rings])
-    return (
-        float(a[:, 0].min()), float(a[:, 1].min()),
-        float(a[:, 0].max()), float(a[:, 1].max()),
-    )
-
-
 # ---------------------------------------------------------------------------
 # properties codec (spec: packed little-endian (u16 column idx, value))
 # ---------------------------------------------------------------------------
@@ -572,7 +551,7 @@ def fgb_encode(
         if g is None:
             boxes[i] = (np.inf, np.inf, -np.inf, -np.inf)
         else:
-            boxes[i] = _wkb_bbox(g)
+            boxes[i] = wkb.bbox(g)
             gts.add(wkb.parse(g)[0])
     use_index = index and n > 0
     if use_index and any(g is None for g in geoms):
@@ -825,7 +804,7 @@ def read_fgb(
         if post_bbox is not None:
             x0, y0, x1, y1 = post_bbox
             boxes = [
-                None if g is None else _wkb_bbox(bytes(g))
+                None if g is None else wkb.bbox(bytes(g))
                 for g in pdf["geometry"]
             ]
             pdf = pdf[np.array([
@@ -846,41 +825,20 @@ def write_fgb_dir(
     node_size: int = 16,
     index: bool = True,
 ) -> DataFrame:
-    """Granule-parallel sink: one indexed .fgb per partition,
+    """Granule-parallel sink: one indexed .fgb per input partition,
     manifest (path, n_rows). ``index=False`` permits null
     geometries (indexed layers refuse them, like the reference
-    writer). Shared-FS contract (the write_shapefile_dir /
-    write_gtiff_dir pattern)."""
-    os.makedirs(out_dir, exist_ok=True)
-    src = df.withColumn("__pid", F.spark_partition_id())
+    writer). Shared-FS contract (:func:`gdal_spark.io.write_granules`)."""
+    from .io import write_granules
 
-    def sink(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        pid = int(pdf["__pid"].iloc[0])
+    def encode(pdf):
         blob = fgb_encode(
-            pdf.drop(columns=["__pid"]),
-            geometry_col=geometry_col, name=name,
+            pdf, geometry_col=geometry_col, name=name,
             node_size=node_size, index=index,
         )
-        p = os.path.join(out_dir, f"part-{pid:05d}.fgb")
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, p)
-        yield pd.DataFrame({"path": [p], "n_rows": [len(pdf)]})
+        return {".fgb": blob}, {}
 
-    # explicit partition count: a bare repartition("__pid") is a
-    # default-numbered shuffle, which AQE happily coalesces into
-    # ONE task for small batches — serializing the granule encode;
-    # pinning it to the upstream partition count keeps the sink
-    # granule-parallel at every scale
-    n_gran = max(1, df.rdd.getNumPartitions())
-    return src.repartition(n_gran, "__pid").mapInPandas(
-        sink, "path string, n_rows long"
-    )
+    return write_granules(df, out_dir, geometry_col, encode)
 
 
 def read_fgb_stream(spark: SparkSession, path: str) -> DataFrame:

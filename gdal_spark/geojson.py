@@ -7,7 +7,7 @@ Two container shapes, matching the reference's two drivers:
   native splittable line source, so a 10 TB .geojsonl reads with
   full parallelism and no custom input format — followed by one
   Arrow-batched parse kernel; writing emits one part file per
-  partition.
+  input partition.
 * **GeoJSON** (one FeatureCollection per file): file-parallel, one
   granule per task, for the sharded-small-files layout.
 
@@ -24,8 +24,6 @@ Catalyst's from_json.
 from __future__ import annotations
 
 import json
-import os
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -194,61 +192,42 @@ def write_geojson_seq(
     """Partition-parallel GeoJSONSeq sink: every non-geometry column
     becomes a property (canonical separators, sorted keys —
     deterministic bytes per partition content); one part file per
-    partition, manifest (path, n_rows). Shared-FS contract like the
-    other granule sinks."""
-    os.makedirs(out_dir, exist_ok=True)
+    input partition, manifest (path, n_rows). Shared-FS contract
+    (:func:`gdal_spark.io.write_granules`)."""
+    from .io import write_granules
+
     attr_cols = [
         c for c in df.columns if c not in (geometry_col, id_col)
     ]
-    src = df.withColumn("__pid", F.spark_partition_id())
 
-    def sink(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        pid = int(pdf["__pid"].iloc[0])
-        path = os.path.join(out_dir, f"part-{pid:05d}.geojsonl")
-        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        n = 0
-        with open(tmp, "w", encoding="utf-8") as f:
-            cols = [pdf[c] for c in attr_cols]
-            geos = pdf[geometry_col]
-            fids = pdf[id_col] if id_col else [None] * len(pdf)
-            for i, (g, fid) in enumerate(zip(geos, fids)):
-                props = {}
-                for name, col in zip(attr_cols, cols):
-                    v = col.iloc[i]
-                    if isinstance(v, np.generic):
-                        v = v.item()
-                    props[name] = v
-                feat = {"type": "Feature"}
-                if fid is not None:
-                    feat["id"] = (
-                        fid.item() if isinstance(fid, np.generic) else fid
-                    )
-                feat["properties"] = props
-                feat["geometry"] = (
-                    None if g is None else wkb_to_geometry(bytes(g))
+    def encode(pdf):
+        lines = []
+        cols = [pdf[c] for c in attr_cols]
+        geos = pdf[geometry_col]
+        fids = pdf[id_col] if id_col else [None] * len(pdf)
+        for i, (g, fid) in enumerate(zip(geos, fids)):
+            props = {}
+            for name, col in zip(attr_cols, cols):
+                v = col.iloc[i]
+                if isinstance(v, np.generic):
+                    v = v.item()
+                props[name] = v
+            feat = {"type": "Feature"}
+            if fid is not None:
+                feat["id"] = (
+                    fid.item() if isinstance(fid, np.generic) else fid
                 )
-                f.write(
-                    json.dumps(feat, sort_keys=True,
-                               separators=(",", ":"))
-                    + "\n"
-                )
-                n += 1
-        os.replace(tmp, path)
-        yield pd.DataFrame({"path": [path], "n_rows": [n]})
+            feat["properties"] = props
+            feat["geometry"] = (
+                None if g is None else wkb_to_geometry(bytes(g))
+            )
+            lines.append(
+                json.dumps(feat, sort_keys=True, separators=(",", ":"))
+                + "\n"
+            )
+        return {".geojsonl": "".join(lines).encode("utf-8")}, {}
 
-    # explicit partition count: a bare repartition("__pid") is a
-    # default-numbered shuffle, which AQE happily coalesces into
-    # ONE task for small batches — serializing the granule encode;
-    # pinning it to the upstream partition count keeps the sink
-    # granule-parallel at every scale
-    n_gran = max(1, df.rdd.getNumPartitions())
-    return src.repartition(n_gran, "__pid").mapInPandas(
-        sink, "path string, n_rows long"
-    )
+    return write_granules(df, out_dir, geometry_col, encode)
 
 
 def read_geojson_seq_stream(spark: SparkSession, path: str) -> DataFrame:

@@ -11,14 +11,14 @@ write, plus honest footer metadata" — exactly how the reference
 treats it (the OGR driver writes the same Arrow tables and attaches
 the geo JSON).
 
-Spark shape: partition-parallel sink via ``mapInPandas`` — each task
-writes one part file with ITS OWN bbox/geometry_types footer
-(GeoParquet is per-file metadata by design, so per-partition
-metadata is spec-correct and needs no global pass), returns a
-manifest row per file. Bbox/type extraction is one numpy pass over
-the partition's WKB. Reading back is a plain ``spark.read.parquet``
-(Spark needs no special handling for the extra footer key) plus a
-footer probe for the metadata.
+Spark shape: partition-parallel sink (``io.write_granules``) — each
+input partition becomes one part file with ITS OWN
+bbox/geometry_types footer (GeoParquet is per-file metadata by
+design, so per-partition metadata is spec-correct and needs no
+global pass) and one manifest row. Bbox/type extraction is one
+numpy pass over the partition's WKB. Reading back is a plain
+``spark.read.parquet`` (Spark needs no special handling for the
+extra footer key) plus a footer probe for the metadata.
 
 DEPLOYMENT: same shared-filesystem/local-mode requirement as
 ``warc.write_warc_dir`` — tasks open plain paths; route through a
@@ -29,14 +29,11 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import wkb as _wkb
 
@@ -48,37 +45,6 @@ _TYPE_NAMES = {
     _wkb.MULTILINESTRING: "MultiLineString",
     _wkb.MULTIPOLYGON: "MultiPolygon",
 }
-
-
-def wkb_bbox(buf: bytes) -> tuple[float, float, float, float]:
-    """(xmin, ymin, xmax, ymax) of any supported WKB geometry."""
-    gtype, payload = _wkb.parse(buf)
-
-    def _coords(gt, pl):
-        if gt == _wkb.POINT:
-            return [np.array([pl])]
-        if gt == _wkb.LINESTRING:
-            return [pl]
-        if gt == _wkb.POLYGON:
-            return pl
-        # multi*: element payloads keep their member type's shape
-        out = []
-        sub = {
-            _wkb.MULTIPOINT: _wkb.POINT,
-            _wkb.MULTILINESTRING: _wkb.LINESTRING,
-            _wkb.MULTIPOLYGON: _wkb.POLYGON,
-        }[gt]
-        for p in pl:
-            out.extend(_coords(sub, p))
-        return out
-
-    arrs = _coords(gtype, payload)
-    allc = np.vstack([np.asarray(a, dtype=np.float64).reshape(-1, 2)
-                      for a in arrs])
-    return (
-        float(allc[:, 0].min()), float(allc[:, 1].min()),
-        float(allc[:, 0].max()), float(allc[:, 1].max()),
-    )
 
 
 def geo_metadata(
@@ -109,24 +75,13 @@ def write_geoparquet(
     geometry_col: str = "geometry",
     crs: dict | None = None,
 ) -> DataFrame:
-    """Partition-parallel GeoParquet sink: one part file per
+    """Partition-parallel GeoParquet sink: one part file per input
     partition, each carrying its own spec-correct ``geo`` footer
     (bbox + geometry_types computed from that file's rows). Returns
     the manifest DataFrame (path, n_rows, xmin, ymin, xmax, ymax)."""
-    os.makedirs(out_dir, exist_ok=True)
-    if geometry_col not in df.columns:
-        raise ValueError(f"missing geometry column {geometry_col!r}")
-    src = df.withColumn("__pid", F.spark_partition_id())
-    cols = [c for c in df.columns]
-    crs_json = crs
+    from .io import write_granules
 
-    def sink(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)[cols + ["__pid"]]
-        pid = int(pdf["__pid"].iloc[0])
-        body = pdf[cols]
+    def encode(body):
         types: set[str] = set()
         boxes = []
         # NULL geometries are legal in the spec (the reference Parquet
@@ -137,7 +92,7 @@ def write_geoparquet(
                 continue
             gt, _ = _wkb.parse(bytes(buf))
             types.add(_TYPE_NAMES[gt])
-            boxes.append(wkb_bbox(bytes(buf)))
+            boxes.append(_wkb.bbox(bytes(buf)))
         if boxes:
             bx = np.asarray(boxes, dtype=np.float64)
             bbox = (
@@ -147,37 +102,22 @@ def write_geoparquet(
         else:
             # all-null partition: bbox is optional per spec — omit it.
             bbox = None
-        meta = geo_metadata(geometry_col, sorted(types), bbox, crs_json)
+        meta = geo_metadata(geometry_col, sorted(types), bbox, crs)
         table = pa.Table.from_pandas(body, preserve_index=False)
         table = table.replace_schema_metadata(
             {**(table.schema.metadata or {}),
              b"geo": json.dumps(meta).encode()}
         )
-        path = os.path.join(out_dir, f"part-{pid:05d}.parquet")
-        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-        mb = bbox if bbox is not None else (
-            float("nan"),) * 4
-        yield pd.DataFrame(
-            {
-                "path": [path],
-                "n_rows": [len(body)],
-                "xmin": [mb[0]],
-                "ymin": [mb[1]],
-                "xmax": [mb[2]],
-                "ymax": [mb[3]],
-            }
+        sink = pa.BufferOutputStream()
+        pq.write_table(table, sink)
+        mb = bbox if bbox is not None else (float("nan"),) * 4
+        return (
+            {".parquet": sink.getvalue().to_pybytes()},
+            dict(zip(("xmin", "ymin", "xmax", "ymax"), mb)),
         )
 
-    # explicit partition count: a bare repartition("__pid") is a
-    # default-numbered shuffle, which AQE happily coalesces into
-    # ONE task for small batches — serializing the granule encode;
-    # pinning it to the upstream partition count keeps the sink
-    # granule-parallel at every scale
-    n_gran = max(1, df.rdd.getNumPartitions())
-    return src.repartition(n_gran, "__pid").mapInPandas(
-        sink,
+    return write_granules(
+        df, out_dir, geometry_col, encode,
         "path string, n_rows long, xmin double, ymin double, "
         "xmax double, ymax double",
     )

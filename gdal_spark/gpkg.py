@@ -19,7 +19,7 @@ Spark shape:
   (spatial join, layer algebra, GeoParquet sink) consumes it
   unchanged — a 500 GB gpkg reads with full cluster parallelism.
 * :func:`write_gpkg_dir` — partition-parallel sink: one .gpkg per
-  partition with spec-required metadata tables
+  input partition with spec-required metadata tables
   (gpkg_spatial_ref_sys / gpkg_contents / gpkg_geometry_columns),
   manifest row per file.
 
@@ -31,17 +31,14 @@ range-read HTTP).
 
 from __future__ import annotations
 
-import os
 import sqlite3
 import struct
-import uuid
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from . import geoparquet as _gpq
+from . import wkb as _wkb
 
 _SQLITE_TO_SPARK = {
     "INTEGER": "long",
@@ -103,11 +100,11 @@ def _curve_safe_bbox(buf: bytes) -> tuple:
     let corrupt type words through)."""
     fmt = "<" if buf[0] == 1 else ">"
     (code,) = struct.unpack_from(fmt + "I", buf, 1)
-    if 8 <= (code & 0xFFFF) % 1000 <= 12:
+    if 8 <= _wkb.type_word(code)[0] <= 12:
         from . import curves
 
-        return _gpq.wkb_bbox(curves.linearize(buf))
-    return _gpq.wkb_bbox(buf)
+        return _wkb.bbox(curves.linearize(buf))
+    return _wkb.bbox(buf)
 
 
 # --------------------------------------------------------------------------
@@ -238,31 +235,21 @@ def write_gpkg_dir(
     srs_id: int = 0,
 ) -> DataFrame:
     """Partition-parallel GeoPackage sink: one spec-complete .gpkg
-    per partition (metadata tables + feature table, GPB blobs with
-    envelopes, contents row carrying the file-local extent), manifest
-    (path, n_rows). Same shared-FS contract as the other granule
-    sinks."""
-    os.makedirs(out_dir, exist_ok=True)
-    cols = df.columns
-    if geometry_col not in cols:
-        raise ValueError(f"missing geometry column {geometry_col!r}")
-    attr_cols = [c for c in cols if c != geometry_col]
+    per input partition (metadata tables + feature table, GPB blobs
+    with envelopes, contents row carrying the file-local extent),
+    manifest (path, n_rows). The database is built in memory and
+    published whole (:func:`gdal_spark.io.write_granules`)."""
+    from .io import write_granules
+
+    attr_cols = [c for c in df.columns if c != geometry_col]
     fields = dict(df.dtypes)
     decl = {
         "bigint": "INTEGER", "int": "INTEGER", "double": "REAL",
         "string": "TEXT", "binary": "BLOB", "boolean": "BOOLEAN",
     }
-    src = df.withColumn("__pid", F.spark_partition_id())
 
-    def sink(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        pid = int(pdf["__pid"].iloc[0])
-        path = os.path.join(out_dir, f"part-{pid:05d}.gpkg")
-        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        con = sqlite3.connect(tmp)
+    def encode(pdf):
+        con = sqlite3.connect(":memory:")
         try:
             con.execute("PRAGMA application_id = 0x47504B47")  # 'GPKG'
             con.execute("PRAGMA user_version = 10300")
@@ -319,17 +306,8 @@ def write_gpkg_dir(
                 (table, geometry_col, srs_id),
             )
             con.commit()
+            return {".gpkg": con.serialize()}, {}
         finally:
             con.close()
-        os.replace(tmp, path)
-        yield pd.DataFrame({"path": [path], "n_rows": [len(pdf)]})
 
-    # explicit partition count: a bare repartition("__pid") is a
-    # default-numbered shuffle, which AQE happily coalesces into
-    # ONE task for small batches — serializing the granule encode;
-    # pinning it to the upstream partition count keeps the sink
-    # granule-parallel at every scale
-    n_gran = max(1, df.rdd.getNumPartitions())
-    return src.repartition(n_gran, "__pid").mapInPandas(
-        sink, "path string, n_rows long"
-    )
+    return write_granules(df, out_dir, geometry_col, encode)

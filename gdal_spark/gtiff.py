@@ -1130,6 +1130,8 @@ def write_gtiff_dir(
     :func:`cog_encode` — the gdaladdo-at-write-time path the
     reference's COG driver takes (frmts/cog/cogdriver.cpp).
     """
+    from .io import commit
+
     os.makedirs(out_dir, exist_ok=True)
     key = F.col(group_col) if group_col else F.col("z")
     src = tiles.select(
@@ -1186,10 +1188,7 @@ def write_gtiff_dir(
                 bigtiff=bigtiff,
             )
         path = os.path.join(out_dir, f"granule-{k:06d}.tif")
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
+        commit(path, data)
         n_blocks = len(pdf)
         return pd.DataFrame(
             [(

@@ -80,15 +80,12 @@ def read_manifest(out_dir: str) -> dict[int, dict]:
 def _commit_manifest(out_dir: str, entry: dict) -> None:
     """Atomic write-then-rename (checkpoint atomicity discipline,
     SURVEY.md §7.3)."""
-    mdir = _manifest_dir(out_dir)
-    os.makedirs(mdir, exist_ok=True)
-    final = _manifest_path(out_dir, entry["bucket"])
-    tmp = final + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(entry, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, final)
+    from .io import commit
+
+    os.makedirs(_manifest_dir(out_dir), exist_ok=True)
+    commit(
+        _manifest_path(out_dir, entry["bucket"]), json.dumps(entry).encode()
+    )
 
 
 def checkpointed_write(

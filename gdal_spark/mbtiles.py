@@ -28,7 +28,6 @@ import gzip
 import hashlib
 import os
 import sqlite3
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -117,6 +116,8 @@ def write_mbtiles(
     md5); deterministic bytes per granule content (rows sorted,
     fixed codec params, gzip mtime=0 — byte-stable reruns land
     atomically via tmp+rename)."""
+    from .io import commit
+
     if format not in ("png", "jpg", "pbf"):
         raise ValueError(f"unsupported format {format!r}")
     need = ("z", "tx", "ty", "data") if format == "pbf" else (
@@ -171,8 +172,7 @@ def write_mbtiles(
         path = out if single else os.path.join(
             out, f"part-{k:05d}.mbtiles"
         )
-        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        con = sqlite3.connect(tmp)
+        con = sqlite3.connect(":memory:")
         try:
             for ddl in _MBT_DDL:
                 con.execute(ddl)
@@ -192,11 +192,10 @@ def write_mbtiles(
                 ],
             )
             con.commit()
+            blob = con.serialize()
         finally:
             con.close()
-        os.replace(tmp, path)
-        with open(path, "rb") as f:
-            blob = f.read()
+        commit(path, blob)
         return pd.DataFrame(
             [(
                 path, len(pdf), zmin, zmax, len(blob),

@@ -378,9 +378,7 @@ def write_tiles_mvt(
             for i in range(len(pdf)):
                 buf = bytes(pdf[geometry_col].iloc[i])
                 gt, payload = _wkb.parse(buf)
-                from . import geoparquet as _gpq
-
-                x0, y0, x1, y1 = _gpq.wkb_bbox(buf)
+                x0, y0, x1, y1 = _wkb.bbox(buf)
                 mx0, my0 = mercator.lat_lon_to_meters(
                     np.array([x0]), np.array([y0])
                 )

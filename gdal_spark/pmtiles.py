@@ -452,6 +452,8 @@ def write_pmtiles_dir(
     exchange and writes one archive per non-empty partition. Either
     way the input's own exchanges (e.g. a pyramid's per-level
     shuffles) run once, inside the write."""
+    from .io import commit
+
     if group_col is None:
         src = df.withColumn("__g", F.spark_partition_id())
     else:
@@ -469,12 +471,8 @@ def write_pmtiles_dir(
                 (int(r.z), int(r.tx), int(r.ty), bytes(r.data))
                 for r in grp.itertuples(index=False)
             ]
-            blob = pmtiles_encode(tiles, fmt=fmt)
             p = os.path.join(out_dir, f"part-{int(g):05d}.pmtiles")
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as f:
-                f.write(blob)
-            os.replace(tmp, p)
+            commit(p, pmtiles_encode(tiles, fmt=fmt))
             yield pd.DataFrame(
                 {"path": [p], "n_tiles": [len(tiles)]}
             )

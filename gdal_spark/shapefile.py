@@ -27,8 +27,8 @@ Spark shape:
   multi-GB shapefile scans with full parallelism and zero record
   bytes through the driver.
 * :func:`write_shapefile_dir` — partition-parallel sink (one
-  .shp/.shx/.dbf triple per partition, manifest per file) — which
-  also makes every test fixture self-contained.
+  .shp/.shx/.dbf triple per input partition, manifest per file) —
+  which also makes every test fixture self-contained.
 
 Same shared-filesystem/local-mode deployment contract as the other
 granule sources/sinks.
@@ -42,7 +42,6 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import geometry as geom
 from . import wkb as _wkb
@@ -193,9 +192,7 @@ def write_shp(geoms: list[bytes | None]) -> tuple[bytes, bytes]:
     """WKB list -> (.shp bytes, .shx bytes)."""
     payloads = [wkb_to_shape(g) for g in geoms]
     # bbox over non-null
-    from . import geoparquet as _gpq
-
-    boxes = [_gpq.wkb_bbox(g) for g in geoms if g is not None]
+    boxes = [_wkb.bbox(g) for g in geoms if g is not None]
     bx = (
         np.asarray(boxes) if boxes else np.zeros((1, 4))
     )
@@ -444,40 +441,19 @@ def write_shapefile_dir(
     out_dir: str,
     geometry_col: str = "geometry",
 ) -> DataFrame:
-    """Partition-parallel sink: one .shp/.shx/.dbf triple per
-    partition, manifest (path, n_rows). Shared-FS contract."""
-    os.makedirs(out_dir, exist_ok=True)
+    """Partition-parallel sink: one .shp/.shx/.dbf triple per input
+    partition, manifest (path of the .shp, n_rows). Shared-FS contract
+    (:func:`gdal_spark.io.write_granules`)."""
+    from .io import write_granules
+
     attr_cols = [c for c in df.columns if c != geometry_col]
-    src = df.withColumn("__pid", F.spark_partition_id())
 
-    def sink(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        pid = int(pdf["__pid"].iloc[0])
-        base = os.path.join(out_dir, f"part-{pid:05d}")
-        geoms = [
-            None if g is None else bytes(g)
-            for g in pdf[geometry_col]
-        ]
-        shp, shx = write_shp(geoms)
-        dbf = write_dbf(pdf[attr_cols])
-        for ext, blob in ((".shp", shp), (".shx", shx), (".dbf", dbf)):
-            tmp = base + ext + ".tmp"
-            with open(tmp, "wb") as f:
-                f.write(blob)
-            os.replace(tmp, base + ext)
-        yield pd.DataFrame(
-            {"path": [base + ".shp"], "n_rows": [len(pdf)]}
-        )
+    def encode(pdf):
+        shp, shx = write_shp([
+            None if g is None else bytes(g) for g in pdf[geometry_col]
+        ])
+        return {
+            ".shp": shp, ".shx": shx, ".dbf": write_dbf(pdf[attr_cols]),
+        }, {}
 
-    # explicit partition count: a bare repartition("__pid") is a
-    # default-numbered shuffle, which AQE happily coalesces into
-    # ONE task for small batches — serializing the granule encode;
-    # pinning it to the upstream partition count keeps the sink
-    # granule-parallel at every scale
-    n_gran = max(1, df.rdd.getNumPartitions())
-    return src.repartition(n_gran, "__pid").mapInPandas(
-        sink, "path string, n_rows long"
-    )
+    return write_granules(df, out_dir, geometry_col, encode)

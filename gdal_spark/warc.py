@@ -245,6 +245,8 @@ def write_warc_dir(df: DataFrame, out_dir: str,
     bytes via a foreachPartition + ``org.apache.hadoop.fs``, or land
     them as parquet-of-binary with :func:`warc_file_bytes` applied
     downstream)."""
+    from .io import commit
+
     os.makedirs(out_dir, exist_ok=True)
     part_col = F.spark_partition_id()
     src = df.select(
@@ -268,10 +270,7 @@ def write_warc_dir(df: DataFrame, out_dir: str,
             recs.sort(key=lambda r: (r[0], r[1]))
             data = warc_file_bytes(recs)
             path = os.path.join(out_dir, f"part-{pid:05d}.warc.gz")
-            tmp = path + ".tmp"
-            with open(tmp, "wb") as f:
-                f.write(data)
-            os.replace(tmp, path)
+            commit(path, data)
             rows.append((path, len(recs), len(data)))
         yield pd.DataFrame(
             rows, columns=["path", "n_records", "n_bytes"]

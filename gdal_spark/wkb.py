@@ -6,11 +6,14 @@ engine adopts the same at-rest representation: geometry is a
 ``BinaryType`` column, decoded to numpy coordinate arrays inside
 vectorized UDFs.  Supports the types the north rule needs: Point,
 LineString, Polygon (with holes), MultiPoint, MultiLineString,
-MultiPolygon.  No shapely dependency.
+MultiPolygon.  No shapely dependency.  Every decoder reads the type
+word through :func:`type_word`; Z and M geometries raise
+``ValueError`` (:func:`xy_type`).
 """
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -98,10 +101,33 @@ class _Reader:
         return np.asarray(arr, dtype=np.float64)
 
 
-def _geom_type(code: int) -> int:
-    # strip EWKB dimension flag bits (0x80000000 Z, 0x40000000 M,
-    # 0x20000000 SRID) then the ISO Z/M/ZM offsets (1000/2000/3000)
-    return (code & 0x0FFFFFFF) % 1000
+def type_word(code: int) -> tuple[int, bool, bool, bool]:
+    """Split a WKB type word into ``(base, has_z, has_m, has_srid)``:
+    the ISO offsets 1000 (Z), 2000 (M) and 3000 (ZM), and the EWKB
+    flags 0x80000000 (Z), 0x40000000 (M) and 0x20000000 (SRID)."""
+    iso, base = divmod(code & 0x1FFFFFFF, 1000)
+    if iso > 3:
+        raise ValueError(f"invalid WKB type word {code} ({code:#010x})")
+    return (
+        base,
+        bool(code & 0x80000000) or iso in (1, 3),
+        bool(code & 0x40000000) or iso in (2, 3),
+        bool(code & 0x20000000),
+    )
+
+
+@functools.cache  # once per geometry; at most 2000 words are valid
+def xy_type(code: int) -> tuple[int, bool]:
+    """``(base, has_srid)`` of a 2-D type word. Z and M words raise
+    ``ValueError``: the engine's coordinates are XY only, and reading
+    them as XY would shift every later coordinate."""
+    base, has_z, has_m, has_srid = type_word(code)
+    if has_z or has_m:
+        raise ValueError(
+            f"unsupported WKB type word {code} ({code:#010x}): "
+            "Z/M coordinates"
+        )
+    return base, has_srid
 
 
 def parse(buf: bytes):
@@ -120,12 +146,12 @@ def _parse_geom(r: _Reader):
     byte_order = r.u8()
     fmt = "<" if byte_order == 1 else ">"
     code = r.u32(fmt)
-    if code & 0x20000000:
+    gtype, has_srid = xy_type(code)
+    if has_srid:
         # EWKB SRID flag (PostGIS): a 4-byte SRID follows the type
         # word before any coordinates — consume it, else the SRID
         # bytes would be read as the first coordinate.
         r.u32(fmt)
-    gtype = _geom_type(code)
     if gtype == POINT:
         x, y = struct.unpack_from(fmt + "dd", r.buf, r.pos)
         r.pos += 16
@@ -145,6 +171,24 @@ def _parse_geom(r: _Reader):
         parts = [_parse_geom(r)[1] for _ in range(n)]
         return gtype, parts
     raise ValueError(f"unsupported WKB geometry type {code}")
+
+
+def bbox(buf: bytes) -> tuple[float, float, float, float]:
+    """(xmin, ymin, xmax, ymax) of any supported WKB geometry."""
+    gtype, payload = parse(buf)
+    if gtype == POINT:
+        x, y = payload
+        return x, y, x, y
+    if gtype in (LINESTRING, MULTIPOINT):
+        a = np.asarray(payload, dtype=np.float64)
+    elif gtype in (POLYGON, MULTILINESTRING):
+        a = np.vstack(payload)
+    else:  # MULTIPOLYGON
+        a = np.vstack([r for rings in payload for r in rings])
+    return (
+        float(a[:, 0].min()), float(a[:, 1].min()),
+        float(a[:, 0].max()), float(a[:, 1].max()),
+    )
 
 
 def polygon_rings(buf: bytes) -> list[list[np.ndarray]]:

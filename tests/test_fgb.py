@@ -214,24 +214,24 @@ def test_flatbuffer_defaults_and_absent_fields():
     assert tbl.vector(5) is None
 
 
-def test_sink_stays_granule_parallel(spark, tmp_path):
-    """Regression pin for the AQE-coalesce trap: a multi-partition
-    input must produce MULTIPLE granules (a bare repartition("__pid")
-    used to let AQE collapse the sink into one task)."""
-    rng = np.random.default_rng(9)
-    pdf = pd.DataFrame({
-        "gid": np.arange(800),
-        "geometry": [
-            wkb.point(float(x), float(y))
-            for x, y in rng.uniform(0, 100, (800, 2))
-        ],
-    })
-    src = spark.createDataFrame(pdf).repartition(8)
-    manifest = fgb.write_fgb_dir(
-        src, str(tmp_path / "par")
-    ).toPandas()
-    assert manifest["n_rows"].sum() == 800
-    assert len(manifest) >= 2
+def test_sink_stays_granule_parallel(tmp_path, uneven_partitions):
+    """One granule per input partition: an 8-partition input writes
+    exactly part-00000..part-00007, each holding that partition's
+    rows. The sink's exchange is pinned to 8 partitions (a bare
+    repartition("__pid") lets AQE collapse it into one task), and a
+    task that receives several partitions still splits them."""
+    src, counts = uneven_partitions
+    out = tmp_path / "par"
+    manifest = fgb.write_fgb_dir(src, str(out)).toPandas()
+    manifest = manifest.sort_values("path", ignore_index=True)
+    names = [f"part-{k:05d}.fgb" for k in range(8)]
+    assert [os.path.basename(p) for p in manifest["path"]] == names
+    assert sorted(os.listdir(out)) == names
+    assert manifest["n_rows"].tolist() == counts
+    for k, p in enumerate(manifest["path"]):
+        with open(p, "rb") as f:
+            gid = fgb.fgb_decode(f.read())["gid"]
+        assert (gid // 100 == k).all() and len(gid) == counts[k]
 
 
 def test_bbox_without_index_matches_indexed_semantics(spark, tmp_path):

@@ -3,6 +3,7 @@ correctness, round-trip through plain Spark parquet, and bbox from
 every WKB type."""
 
 import json
+import struct
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -29,19 +30,29 @@ def _geoms_df(spark):
 
 
 def test_wkb_bbox_all_types():
-    assert gpq.wkb_bbox(wkb.point(2.0, 3.0)) == (2.0, 3.0, 2.0, 3.0)
-    assert gpq.wkb_bbox(
+    assert wkb.bbox(wkb.point(2.0, 3.0)) == (2.0, 3.0, 2.0, 3.0)
+    assert wkb.bbox(
         wkb.linestring([(0.0, 1.0), (4.0, -2.0)])
     ) == (0.0, -2.0, 4.0, 1.0)
-    assert gpq.wkb_bbox(
+    assert wkb.bbox(
         wkb.polygon([[(0, 0), (2, 0), (2, 2), (0, 2), (0, 0)]])
     ) == (0.0, 0.0, 2.0, 2.0)
-    assert gpq.wkb_bbox(
+    assert wkb.bbox(
         wkb.multipolygon(
             [[[(5, 5), (6, 5), (6, 6), (5, 6), (5, 5)]],
              [[(7, 7), (9, 7), (9, 9), (7, 9), (7, 7)]]]
         )
     ) == (5.0, 5.0, 9.0, 9.0)
+    # EWKB with the SRID flag: the SRID word is not a coordinate
+    ewkb = (struct.pack("<BII", 1, 0x20000002, 4326)
+            + struct.pack("<I4d", 2, 0.0, 1.0, 4.0, -2.0))
+    assert wkb.bbox(ewkb) == (0.0, -2.0, 4.0, 1.0)
+    # big-endian polygon
+    ring = [(0, 0), (2, 0), (2, 3), (0, 0)]
+    be = struct.pack(">BIII", 0, wkb.POLYGON, 1, len(ring)) + b"".join(
+        struct.pack(">2d", x, y) for x, y in ring
+    )
+    assert wkb.bbox(be) == (0.0, 0.0, 2.0, 3.0)
 
 
 def test_write_and_read_geoparquet(spark, tmp_path):

@@ -110,8 +110,6 @@ def test_ranged_scan_equals_file_scan(spark, tmp_path):
 
 def test_downstream_composition(spark, tmp_path):
     """GPKG -> WKB column feeds the existing geometry machinery."""
-    from gdal_spark import geoparquet as gpq
-
     out = str(tmp_path / "gp2")
     src = _feature_df(spark, 8).coalesce(1)
     manifest = gpkg.write_gpkg_dir(src, out).toPandas()
@@ -119,11 +117,11 @@ def test_downstream_composition(spark, tmp_path):
         spark, manifest["path"].iloc[0], "features"
     )
     boxes = {
-        int(r["fid_src"]): gpq.wkb_bbox(bytes(r["geometry"]))
+        int(r["fid_src"]): wkb.bbox(bytes(r["geometry"]))
         for r in back.collect()
     }
     want = {
-        int(r["fid_src"]): gpq.wkb_bbox(bytes(r["geometry"]))
+        int(r["fid_src"]): wkb.bbox(bytes(r["geometry"]))
         for r in src.collect()
     }
     assert boxes == want

@@ -14,8 +14,8 @@ def _sources():
 
 def test_no_rdd_usage():
     """No RDD DATA paths (the DataFrame API is the engine contract).
-    `.rdd.getNumPartitions()` is exempt: plan metadata only — the
-    granule sinks pin their repartition width with it so AQE can't
+    `.rdd.getNumPartitions()` is exempt in io.py only: plan metadata —
+    `write_granules` pins its repartition width with it so AQE can't
     coalesce the shuffle into one task."""
     offenders = []
     for p in _sources():
@@ -23,7 +23,10 @@ def test_no_rdd_usage():
             if (
                 re.search(r"\.rdd\b", line)
                 and "sparkContext" not in line
-                and ".rdd.getNumPartitions()" not in line
+                and not (
+                    p.name == "io.py"
+                    and ".rdd.getNumPartitions()" in line
+                )
             ):
                 offenders.append(f"{p.name}:{i}")
     assert not offenders, offenders

@@ -69,15 +69,20 @@ def test_big_endian_parse():
 
 
 def test_iso_z_type_codes_stripped():
-    import struct
-
-    # ISO WKB Polygon Z = 1003; we only read XY here but type must map
-    buf = struct.pack("<BII", 1, 1001, 0)  # PointZ header (no coords read)
-    # PointZ would carry 3 doubles; our parser reads 2 — only assert the
-    # type mapping helper
-    assert wkb._geom_type(1003) == wkb.POLYGON
-    assert wkb._geom_type(3006) == wkb.MULTIPOLYGON
-    assert wkb._geom_type(1) == wkb.POINT
+    """type_word maps ISO Z/M/ZM offsets and EWKB flags to the base
+    type and reports each dimension flag."""
+    assert wkb.type_word(1003) == (wkb.POLYGON, True, False, False)
+    assert wkb.type_word(3006) == (wkb.MULTIPOLYGON, True, True, False)
+    assert wkb.type_word(1) == (wkb.POINT, False, False, False)
+    assert wkb.type_word(2002) == (wkb.LINESTRING, False, True, False)
+    assert wkb.type_word(0x80000002) == (
+        wkb.LINESTRING, True, False, False
+    )
+    assert wkb.type_word(0x40000001) == (wkb.POINT, False, True, False)
+    assert wkb.type_word(0xE0000003) == (wkb.POLYGON, True, True, True)
+    assert wkb.type_word(0x20000008) == (8, False, False, True)
+    with pytest.raises(ValueError, match="4001"):
+        wkb.type_word(4001)
 
 
 def test_ewkb_srid_flag_consumes_srid_word():
@@ -107,3 +112,54 @@ def test_ewkb_srid_flag_consumes_srid_word():
     assert gt == wkb.POLYGON
     assert len(rings) == 1 and len(rings[0]) == 4
     assert rings[0][1][0] == 4.0
+
+
+def _zm_geometries():
+    """(type word, WKB) pairs with Z and/or M coordinates. Each one
+    parses without error when its coordinates are misread as XY."""
+    import struct
+
+    def ring(dims):
+        pts = [(0, 0), (4, 0), (4, 4), (0, 0)]
+        return struct.pack("<I", len(pts)) + b"".join(
+            struct.pack(f"<{dims}d", x, y, *[5.0] * (dims - 2))
+            for x, y in pts
+        )
+
+    line_z = struct.pack("<I6d", 2, 0, 0, 1, 1, 1, 1)
+    return [
+        (1001, struct.pack("<BI3d", 1, 1001, 1.0, 2.0, 3.0)),
+        (1002, struct.pack("<BI", 1, 1002) + line_z),
+        (2003, struct.pack("<BII", 1, 2003, 1) + ring(3)),
+        (3006, struct.pack("<BII", 1, 3006, 1)
+         + struct.pack("<BII", 1, 3003, 1) + ring(4)),
+        (0x80000002, struct.pack("<BI", 1, 0x80000002) + line_z),
+    ]
+
+
+def _zm_readers():
+    import pandas as pd
+
+    from gdal_spark import curves, fgb, geojson, gpkg
+
+    return {
+        "wkb.parse": wkb.parse,
+        "curves.parse_curve": curves.parse_curve,
+        "gpkg.wkb_to_gpb": gpkg.wkb_to_gpb,
+        "fgb.fgb_encode": lambda b: fgb.fgb_encode(
+            pd.DataFrame({"geometry": [b]})),
+        "geojson.wkb_to_geometry": geojson.wkb_to_geometry,
+    }
+
+
+@pytest.mark.parametrize("reader", sorted(_zm_readers()))
+@pytest.mark.parametrize(
+    "code,buf", _zm_geometries(),
+    ids=["1001", "1002", "2003", "3006", "ewkb_z"],
+)
+def test_z_m_geometry_rejected(reader, code, buf):
+    """ISO 1xxx/2xxx/3xxx words and the EWKB Z flag raise a ValueError
+    naming the word; reading them as XY used to return garbage (or
+    drop Z) silently."""
+    with pytest.raises(ValueError, match=rf"\b{code}\b.*Z/M"):
+        _zm_readers()[reader](buf)
